@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -122,12 +123,11 @@ class KGJob:
         return (self.spark.read.parquet(os.path.join(self.prior, "mentions")),
                 self.spark.read.parquet(os.path.join(self.prior, "triples")))
 
-    def prepare(self) -> None:
-        """Set-up for the incremental workload: a full build of the base
-        corpus, written as the prior snapshot."""
-        if self.incremental:
-            kg = self.build_call(self.read("base_pages"))
-            write_kg(kg, self.prior, ("mentions", "triples"))
+    def build_prior(self) -> None:
+        """The incremental workload's warm-up operation: a full build of
+        the base corpus, written as the prior snapshot."""
+        kg = self.build_call(self.read("base_pages"))
+        write_kg(kg, self.prior, ("mentions", "triples"))
 
     def run(self, out: str) -> None:
         """One operation: input table -> KG tables written under ``out``."""
@@ -211,21 +211,49 @@ def invariant_problems(kg: dict) -> list:
     return problems[:5]
 
 
-def oracle_expected(texts_paths: list, emb_path: str) -> dict:
+def _sql_values(rows: list) -> str:
+    def lit(v):
+        return f"CAST({v} AS DOUBLE)" if isinstance(v, float) else "'" + v + "'"
+
+    return ",\n    ".join("(" + ", ".join(lit(v) for v in row) + ")" for row in rows)
+
+
+def _swap(sql: str, pattern: str, repl: str) -> str:
+    out, n = re.subn(pattern, lambda _: repl, sql, count=1, flags=re.S)
+    if n != 1:
+        raise RuntimeError(f"oracle SQL changed shape: no match for {pattern!r}")
+    return out
+
+
+def oracle_expected(texts_paths: list, emb_path: str, lexicon: dict | None = None) -> dict:
     """Expected nodes/edges from the repo's DuckDB kg_nodes/kg_edges
     oracle over the texts html->text must produce. The oracle's entity
     CTE is wrapped with the cross-chunk merge of the repo's
     kg_entities_chunked oracle (pages over the chunk word budget keep one
     entity per (label, text), at its earliest offset), because the
-    flagship pages include pages over the budget."""
+    flagship pages include pages over the budget. With ``lexicon`` (the
+    generated gazetteer, single lowercase words) the oracle's flagship
+    lexicon is replaced by it and its relation templates by the
+    library's full template set."""
     import duckdb
 
     import __spark_entry__ as entry
-    from glinerswift_spark.config import DEFAULT_CONFIG
+    from glinerswift_spark.config import DEFAULT_CONFIG, RelationConfig
 
     ent = entry._ENT_CTE
-    unmerged = ent.replace("\nent AS MATERIALIZED (", "\nent_unmerged AS MATERIALIZED (")
-    if unmerged == ent:
+    trip = entry._TRIPLE_CTE[len(ent):]
+    new_ent, new_trip = ent, trip
+    if lexicon is not None:
+        new_ent = _swap(ent, r"lex\(term, label, score\) AS \(VALUES\n.*?\n(?=__words AS)", (
+            "lex(term, label, score) AS (VALUES\n    "
+            + _sql_values([(t, lb, sc) for (t, lb), sc in sorted(lexicon.items())])
+            + "),\n"))
+        new_trip = _swap(trip, r"templ\(la, lb, pred\) AS \(VALUES\n.*?\n(?=trip AS)", (
+            "templ(la, lb, pred) AS (VALUES\n    "
+            + _sql_values([(a, b, p) for (a, b), p in RelationConfig().templates.items()])
+            + "),\n"))
+    unmerged = new_ent.replace("\nent AS MATERIALIZED (", "\nent_unmerged AS MATERIALIZED (")
+    if unmerged == new_ent:
         raise RuntimeError("oracle entity CTE changed shape; update the chunk merge")
     budget = DEFAULT_CONFIG.chunk_max_words
     merged = unmerged + f""",
@@ -251,7 +279,12 @@ ent AS MATERIALIZED (
             q = sql[f"kg_{name}"]
             if q.count(ent) != 1:
                 raise RuntimeError(f"kg_{name} oracle no longer embeds the entity CTE once")
-            rows = con.sql(q.replace(ent, merged)).fetchall()
+            q = q.replace(ent, merged)
+            if name == "edges":
+                if q.count(trip) != 1:
+                    raise RuntimeError("kg_edges oracle no longer embeds the triple CTE once")
+                q = q.replace(trip, new_trip)
+            rows = con.sql(q).fetchall()
             if name == "nodes":
                 out[name] = sorted((URL_PREFIX + c, lb, f, int(n)) for c, lb, f, n in rows)
             else:

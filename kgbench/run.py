@@ -24,6 +24,7 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKLOADS = ("pages_flagship", "linking_vocab", "encoder_pages", "incremental_update")
+NOISE_PROBE_S = 1
 END_TO_END_UNITS = {
     "wall_s": "s", "docs_per_s": "1/s", "setup_s": "s", "peak_rss_mb": "MB",
 }
@@ -56,16 +57,17 @@ class Session:
         self.cpus = host.cpus()
         self.inputs = workloads.GENERATORS[args.workload](args.seed)
         # noise probe before the JVM and the sampler thread exist (it forks)
-        self.noise = _host_noise_probe(seconds=3, procs=self.cpus)
+        self.noise = _host_noise_probe(seconds=NOISE_PROBE_S, procs=self.cpus)
         for child in multiprocessing.active_children():  # the probe's spinners
             child.join(timeout=10)
         host.prepare_env(ROOT, work)
         self.paths = kg_ops.write_inputs(self.inputs, work)
         t0 = time.perf_counter()
         self.expected = None
-        if self.inputs.backend == "flagship":  # the oracle's lexicon
+        if self.inputs.backend != "encoder":  # a lexicon the oracle can replay
             texts = [self.paths[k] for k in ("base_texts", "texts") if k in self.paths]
-            self.expected = kg_ops.oracle_expected(texts, self.paths["embeddings"])
+            self.expected = kg_ops.oracle_expected(
+                texts, self.paths["embeddings"], self.inputs.lexicon)
         self.oracle_s = time.perf_counter() - t0
         self.checker = kg_ops.Checker(self.expected)
         self.event_log = os.path.join(work, "eventlog") if args.trace else None
@@ -74,11 +76,14 @@ class Session:
         self.spark = host.start_spark(work, self.cpus, self.event_log)
         self.spark_start_s = time.perf_counter() - t0
         self.job = kg_ops.KGJob(self.spark, self.inputs, self.paths, work)
-        self.job.prepare()
         self.out = os.path.join(work, "out")
-        self.job.run(self.out)
+        self.warmup_problems = []
+        if self.job.incremental:
+            self.job.build_prior()
+        else:
+            self.job.run(self.out)
+            self.warmup_problems = self.checker.problems(self.out)
         self.setup_s = time.perf_counter() - t0
-        self.warmup_problems = self.checker.problems(self.out)
 
     def timed_ops(self, seconds: float) -> dict:
         """Closed loop for ``seconds``: each operation starts when the

@@ -21,12 +21,13 @@ import json
 import os
 import statistics
 import time
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 from kgbench import host
 from kgbench.kg_ops import write_kg
 
 PER_1K = "ms/1k_docs"
+SCORING_DOCS = 200  # the scoring probe runs the first this many generated texts
 
 
 def _identity(batches):
@@ -186,100 +187,89 @@ def probes(job, tr: Tracer, docs) -> None:
             threshold=kw["threshold"]))
 
 
-def scoring_probe(job, n_docs: int = 200) -> dict:
-    """Single-process timing of the per-document scoring functions over
-    the first ``n_docs`` generated texts, no Spark. Mirrors the steps of
-    scoring.pipeline.extract_document, one document at a time; for an
-    encoding backend the score call re-runs its (memoized) encode."""
-    from time import perf_counter as pc
+class SelfTimer:
+    """Self time per step of wrapped callables: a call's duration minus
+    the duration of the wrapped calls nested inside it."""
+
+    def __init__(self, steps):
+        self.t = dict.fromkeys(steps, 0.0)
+        self._nested: list = []  # per open call: time of its wrapped children
+
+    def wrap(self, step: str, fn):
+        def timed(*args, **kwargs):
+            self._nested.append(0.0)
+            t0 = time.perf_counter()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                dt = time.perf_counter() - t0
+                self.t[step] += dt - self._nested.pop()
+                if self._nested:
+                    self._nested[-1] += dt
+        return timed
+
+
+# scoring step -> the callables extract_document reaches it through:
+# names in scoring.pipeline's namespace, and methods of the backend
+SCORING_STEPS = {
+    "split": (("pipeline", "word_spans"),),
+    "chunk": (("pipeline", "chunk_text"),),
+    "encode": (("backend", "encode"),),
+    "score": (("backend", "score_document"), ("backend", "score_document_sparse")),
+    "decode": (("pipeline", "decode_candidates"), ("pipeline", "decode_document_logits"),
+               ("pipeline", "shift_entities"), ("pipeline", "merge_chunk_entities")),
+}
+
+
+def scoring_probe(job) -> dict:
+    """Single-process timing of the per-document scoring steps over the
+    first ``SCORING_DOCS`` generated texts, no Spark: the real
+    ``scoring.pipeline.extract_document`` runs on each text while the
+    callables of ``SCORING_STEPS`` are wrapped to record their self
+    times. The encoding backend's score call runs its encode inside it;
+    that time counts as encode, not score."""
+    from unittest import mock
 
     from glinerswift_spark.config import DEFAULT_CONFIG as cfg
-    from glinerswift_spark.functions.chunker import chunk_text
     from glinerswift_spark.functions.schema_encoding import EncodingOverflowError
-    from glinerswift_spark.functions.text import word_spans
-    from glinerswift_spark.scoring.core import (
-        decode_candidates,
-        decode_spans,
-        merge_chunk_entities,
-        shift_entities,
-    )
+    from glinerswift_spark.scoring import pipeline
 
     backend = job.local_spec().build()
-    labels, thr = job.inputs.labels, job.inputs.threshold
-    sparse = getattr(backend, "score_document_sparse", None)
-    encode = getattr(backend, "encode", None)
-    t = dict.fromkeys(("split", "chunk", "encode", "score", "decode"), 0.0)
-    chunked = overflowed = 0
-    texts = job.inputs.texts["text"].tolist()[:n_docs]
+    timer = SelfTimer(SCORING_STEPS)
+    overflowed = [False]
 
-    def rechunk(piece, spans, off):
-        t0 = pc()
-        sub = chunk_text(piece, cfg.chunk_max_characters,
-                         min(cfg.chunk_overlap_characters, len(piece) // 16),
-                         max(1, len(spans) // 2))
-        if len(sub) > 1:
-            parts = [(c.text, c.start) for c in sub]
-        else:
-            mid = spans[len(spans) // 2][0]
-            parts = [(piece[:mid], 0), (piece[mid:], mid)]
-        t["chunk"] += pc() - t0
-        t0 = pc()
-        out = [(p, word_spans(p), off + o) for p, o in parts]
-        t["split"] += pc() - t0
-        return out
+    def flag_overflow(fn):
+        def call(*args, **kwargs):
+            try:
+                return fn(*args, **kwargs)
+            except EncodingOverflowError:
+                overflowed[0] = True
+                raise
+        return call
 
-    for text in texts:
-        t0 = pc()
-        spans = word_spans(text)
-        t["split"] += pc() - t0
-        todo = [(text, spans, 0)]
-        if len(spans) > cfg.chunk_max_words:
-            chunked += 1
-            t0 = pc()
-            chunks = chunk_text(text, cfg.chunk_max_characters,
-                                cfg.chunk_overlap_characters, cfg.chunk_max_words)
-            t["chunk"] += pc() - t0
-            t0 = pc()
-            todo = [(c.text, word_spans(c.text), c.start) for c in chunks]
-            t["split"] += pc() - t0
-        found, over = [], False
-        while todo:
-            piece, sp, off = todo.pop(0)
-            if not sp:
-                continue
-            if encode is not None:
-                t0 = pc()
-                try:
-                    encode([piece[s:e] for s, e in sp], labels)
-                    t["encode"] += pc() - t0
-                except EncodingOverflowError:
-                    t["encode"] += pc() - t0
-                    over = True
-                    if len(sp) > 1:
-                        todo[:0] = rechunk(piece, sp, off)
-                    continue
-            t0 = pc()
-            if sparse is not None:
-                cands = sparse(piece, sp, labels)
-                t["score"] += pc() - t0
-                t0 = pc()
-                ents = decode_candidates(cands, labels, thr, piece, sp)
-            else:
-                logits = backend.score_document(piece, sp, labels)
-                t["score"] += pc() - t0
-                t0 = pc()
-                ents = decode_spans(logits, labels, thr, piece, sp)
-            found.append(shift_entities(ents, off))
-            t["decode"] += pc() - t0
-        t0 = pc()
-        merge_chunk_entities(found)
-        t["decode"] += pc() - t0
-        overflowed += over
+    texts = job.inputs.texts["text"].tolist()[:SCORING_DOCS]
+    chunked = sum(len(pipeline.word_spans(t)) > cfg.chunk_max_words for t in texts)
+    overflow_docs = 0
+    owners = {"pipeline": pipeline, "backend": backend}
+    with ExitStack() as patches:
+        for step, targets in SCORING_STEPS.items():
+            for owner, name in targets:
+                fn = getattr(owners[owner], name, None)
+                if fn is None:
+                    continue  # a method this backend does not have
+                if step == "encode":
+                    fn = flag_overflow(fn)
+                patches.enter_context(
+                    mock.patch.object(owners[owner], name, timer.wrap(step, fn)))
+        for text in texts:
+            overflowed[0] = False
+            pipeline.extract_document(text, job.inputs.labels, backend, job.inputs.threshold)
+            overflow_docs += overflowed[0]
 
     per_1k = 1e6 / max(1, len(texts))  # seconds -> ms per 1k docs
-    out = {f"scoring.{k}_ms": v * per_1k for k, v in t.items()}
+    out = {f"scoring.{k}_ms": v * per_1k for k, v in timer.t.items()}
     out["scoring.chunked_docs"] = chunked
-    out["scoring.overflow_docs"] = overflowed
+    out["scoring.overflow_docs"] = overflow_docs
     return out
 
 

@@ -22,6 +22,7 @@ from glinerswift_spark.scoring.backends import (
     OBJECT_TERMS,
     OPERATOR_TERMS,
     PromptEncodingSpec,
+    term_score,
 )
 
 URL_PREFIX = "https://bench.example/p/"
@@ -29,6 +30,19 @@ EMB_DIM = 64
 CHUNK_WORDS = DEFAULT_CONFIG.chunk_max_words
 SUBWORD_WINDOW = PromptEncodingSpec().max_seq_len
 RELATION_WINDOW = RelationConfig().window_chars
+
+# workload sizes: the inputs are a function of the seed alone
+FLAGSHIP_PAGES = 500
+INCREMENTAL_BASE_PAGES = 600  # the prior snapshot's corpus
+INCREMENTAL_NEW_PAGES = 100
+INCREMENTAL_FAMILIES = 500
+# small families keep the components rounds, and so the run, short
+INCREMENTAL_MAX_FAMILY = 4
+LINK_FAMILIES = 600
+LINK_DOCS = 600
+LINK_MEAN_FAMILY = 3.5  # spelling variants per family
+LINK_MAX_FAMILY = 12
+ENCODER_PAGES = 200
 
 FILLER = (
     "the a fast slow big small data line part order value window spark "
@@ -162,8 +176,9 @@ def _flagship_props(n_words, n_docs, n_trip, **extra) -> dict:
     }
 
 
-def pages_flagship(seed: int, n_pages: int = 500) -> Inputs:
+def pages_flagship(seed: int) -> Inputs:
     rng = np.random.default_rng([seed, 1])
+    n_pages = FLAGSHIP_PAGES
     ids = list(range(n_pages))
     words, n_words, n_trip = _flagship_docs(rng, ids, 56, 0.05)
     pages, texts = _pages(ids, words)
@@ -171,23 +186,6 @@ def pages_flagship(seed: int, n_pages: int = 500) -> Inputs:
         "pages_flagship", "flagship", list(FLAGSHIP_LABELS), 0.5, pages, texts,
         _emb_table(_unit_rows(rng, 512)),
         properties=_flagship_props(n_words, n_pages, n_trip),
-    )
-
-
-def incremental_update(seed: int, n_base: int = 1200, n_new: int = 100) -> Inputs:
-    rng = np.random.default_rng([seed, 4])
-    base_ids = list(range(n_base))
-    new_ids = list(range(n_base, n_base + n_new))
-    bw, bn, bt = _flagship_docs(rng, base_ids, 56, 0.05)
-    nw, nn, nt = _flagship_docs(rng, new_ids, 56, 0.05)
-    base_pages, base_texts = _pages(base_ids, bw)
-    pages, texts = _pages(new_ids, nw)
-    return Inputs(
-        "incremental_update", "flagship", list(FLAGSHIP_LABELS), 0.5, pages,
-        texts, _emb_table(_unit_rows(rng, 512)),
-        base_pages=base_pages, base_texts=base_texts,
-        properties=_flagship_props(nn, n_new, nt, prior_pages=n_base,
-                                   prior_triples_per_doc=round(bt / n_base, 2)),
     )
 
 
@@ -211,19 +209,18 @@ def _variant(rng, base: str) -> str:
     return base[:i] + base[i] + base[i:]
 
 
-def linking_vocab(seed: int, n_families: int = 600, mean_family: float = 3.5,
-                  n_docs: int = 600) -> Inputs:
-    """Docs over a large vocabulary of spelling-variant families. Variants
-    of one family get nearby vectors (most pairs verify, some do not);
-    different families get unrelated ones."""
-    rng = np.random.default_rng([seed, 2])
+def _families(rng, n_families: int, max_family: int):
+    """A vocabulary of spelling-variant families with a matching lexicon
+    and embeddings table. Variants of one family get nearby vectors (most
+    pairs verify, some do not); different families get unrelated ones.
+    Returns (lexicon, vectors, [(surface, label), ...])."""
     seen: set = set()
     families = []  # (label, [variant, ...], centroid)
     while len(families) < n_families:
         base = "".join(rng.choice(_SYLLABLES, size=int(rng.integers(3, 5))))
         if base in seen:
             continue
-        size = min(int(rng.geometric(1.0 / mean_family)), 12)
+        size = min(int(rng.geometric(1.0 / LINK_MEAN_FAMILY)), max_family)
         members = [base]
         for _ in range(8 * size):
             if len(members) >= size:
@@ -239,7 +236,7 @@ def linking_vocab(seed: int, n_families: int = 600, mean_family: float = 3.5,
     n_vecs = 4 * n_surf + 1
     vectors = _unit_rows(rng, n_vecs)
     used: set = set()
-    lexicon, surfaces = {}, []  # surfaces: (variant, label)
+    lexicon, surfaces = {}, []
     for label, members, centroid in families:
         for v in members:
             vid = vec_id(v, n_vecs)
@@ -251,45 +248,97 @@ def linking_vocab(seed: int, n_families: int = 600, mean_family: float = 3.5,
             vectors[vid] = vec / np.linalg.norm(vec)
             lexicon[(v, label)] = round(float(rng.uniform(0.6, 0.95)), 4)
             surfaces.append((v, label))
+    return lexicon, vectors, surfaces
 
+
+def _family_docs(rng, n_docs: int, surfaces: list, tail_vocab: list):
+    """Docs of 2-4 sentences: filler, entity, short filler, entity, then a
+    24-word tail from ``tail_vocab`` that keeps pairs of different
+    sentences apart. Surfaces stay lowercase, as the oracle's exact token
+    match needs. Returns (word lists, words per doc, triples, surfaces
+    used)."""
+    label_of = {t: "operator" for t in OPERATOR_TERMS}
+    label_of.update({t: "object" for t in OBJECT_TERMS})
     templates = RelationConfig().templates
     word_lists, n_words, n_trip, present = [], [], 0, set()
     for _ in range(n_docs):
         words, ents, pos = [], [], 0
         for _ in range(int(rng.integers(2, 5))):
-            # sentence: filler, entity, short filler, entity, long filler
-            # (the long tail keeps pairs of different sentences apart)
-            pair = [surfaces[int(rng.integers(0, len(surfaces)))] for _ in range(2)]
-            for surf, label in pair:
+            for surf, label in (surfaces[int(rng.integers(0, len(surfaces)))]
+                                for _ in range(2)):
                 for w in rng.choice(FILLER, size=int(rng.integers(2, 6))):
                     words.append(str(w))
                     pos += len(w) + 1
-                token = surf.capitalize()
-                words.append(token)
-                ents.append((pos, pos + len(token), label))
-                pos += len(token) + 1
+                words.append(surf)
+                ents.append((pos, pos + len(surf), label))
+                pos += len(surf) + 1
                 present.add(surf)
-            for w in rng.choice(FILLER, size=24):
-                words.append(str(w))
+            for w in rng.choice(tail_vocab, size=24):
+                w = str(w)
+                if w in label_of:
+                    ents.append((pos, pos + len(w), label_of[w]))
+                words.append(w)
                 pos += len(w) + 1
         n_trip += _triples_in(ents, templates)
         word_lists.append(words)
         n_words.append(len(words))
-    ids = list(range(n_docs))
-    pages, texts = _pages(ids, word_lists)
-    n_words = np.asarray(n_words)
+    return word_lists, np.asarray(n_words), n_trip, present
+
+
+def _family_props(n_words, n_trip, present, surfaces, n_families, **extra) -> dict:
+    return {
+        "pages": len(n_words),
+        "words_per_page": round(float(np.mean(n_words)), 2),
+        "share_over_chunk_budget": round(float(np.mean(n_words > CHUNK_WORDS)), 4),
+        "share_over_subword_window": 0.0,
+        "distinct_surfaces": len(present),
+        "mean_family_size": round(len(surfaces) / n_families, 3),
+        "triples_per_doc": round(n_trip / len(n_words), 2),
+        **extra,
+    }
+
+
+def incremental_update(seed: int) -> Inputs:
+    """A prior corpus and a new batch over spelling-variant families plus
+    the flagship lexicon: the families give the global re-link real
+    blocking, verification and components work; the flagship terms in
+    each sentence's tail give templated triples. The new batch also uses
+    surfaces the prior corpus never saw, which join existing families."""
+    rng = np.random.default_rng([seed, 4])
+    lexicon, vectors, surfaces = _families(rng, INCREMENTAL_FAMILIES, INCREMENTAL_MAX_FAMILY)
+    in_base = rng.random(len(surfaces)) < 0.85
+    base_surfaces = [s for s, keep in zip(surfaces, in_base) if keep]
+    lexicon.update({(t, "operator"): term_score(t) for t in OPERATOR_TERMS})
+    lexicon.update({(t, "object"): term_score(t) for t in OBJECT_TERMS})
+    tail = list(OPERATOR_TERMS) + list(OBJECT_TERMS) + FILLER
+    n_base, n_new = INCREMENTAL_BASE_PAGES, INCREMENTAL_NEW_PAGES
+    bw, _, bt, bp = _family_docs(rng, n_base, base_surfaces, tail)
+    nw, nn, nt, new_present = _family_docs(rng, n_new, surfaces, tail)
+    base_pages, base_texts = _pages(list(range(n_base)), bw)
+    pages, texts = _pages(list(range(n_base, n_base + n_new)), nw)
+    return Inputs(
+        "incremental_update", "gazetteer", _LINK_LABELS + list(FLAGSHIP_LABELS), 0.5,
+        pages, texts, _emb_table(vectors), lexicon=lexicon,
+        base_pages=base_pages, base_texts=base_texts,
+        properties=_family_props(
+            nn, nt, new_present, surfaces, INCREMENTAL_FAMILIES,
+            prior_pages=n_base, prior_distinct_surfaces=len(bp),
+            prior_triples_per_doc=round(bt / n_base, 2),
+            batch_surfaces_not_in_prior=len(new_present - bp)),
+    )
+
+
+def linking_vocab(seed: int) -> Inputs:
+    """Docs over a large vocabulary of spelling-variant families, few
+    triples per doc."""
+    rng = np.random.default_rng([seed, 2])
+    lexicon, vectors, surfaces = _families(rng, LINK_FAMILIES, LINK_MAX_FAMILY)
+    words, n_words, n_trip, present = _family_docs(rng, LINK_DOCS, surfaces, FILLER)
+    pages, texts = _pages(list(range(LINK_DOCS)), words)
     return Inputs(
         "linking_vocab", "gazetteer", list(_LINK_LABELS), 0.5, pages, texts,
         _emb_table(vectors), lexicon=lexicon,
-        properties={
-            "pages": n_docs,
-            "words_per_page": round(float(np.mean(n_words)), 2),
-            "share_over_chunk_budget": round(float(np.mean(n_words > CHUNK_WORDS)), 4),
-            "share_over_subword_window": 0.0,
-            "distinct_surfaces": len(present),
-            "mean_family_size": round(len(surfaces) / len(families), 3),
-            "triples_per_doc": round(n_trip / n_docs, 2),
-        },
+        properties=_family_props(n_words, n_trip, present, surfaces, LINK_FAMILIES),
     )
 
 
@@ -298,11 +347,12 @@ def _random_word(rng, lo: int, hi: int) -> str:
     return "".join(rng.choice(list("abcdefghiklmnoprstuvwyz"), size=k))
 
 
-def encoder_pages(seed: int, n_pages: int = 60) -> Inputs:
+def encoder_pages(seed: int) -> Inputs:
     """Pages for the file-loaded encoder: mostly short, some over the
     chunk word budget, some under it in words but over the subword window
     (long tokens), so chunking and overflow re-chunking both run."""
     rng = np.random.default_rng([seed, 3])
+    n_pages = ENCODER_PAGES
     vocab = [_random_word(rng, 3, 8) for _ in range(400)]
     names = [_random_word(rng, 4, 7).capitalize() for _ in range(120)]
     kinds = rng.choice(3, size=n_pages, p=[0.85, 0.07, 0.08])
