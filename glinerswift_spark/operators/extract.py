@@ -15,12 +15,14 @@ Scale design (100 TB / 1000 executors):
   * The scoring backend is built once per Python worker
     (scoring/backends.get_backend); the spec travels with the closure
     (tiny, picklable) — the Spark analogue of broadcast model weights.
-  * Output is long-format entity rows, ready for relational post-ops.
+  * Every extraction entry point (here, plans/kg_pipeline.py,
+    operators/metrics.py) runs one per-partition kernel behind one
+    widening decision; entry points differ only in their emitters.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -34,7 +36,7 @@ from pyspark.sql.types import (
 
 from glinerswift_spark.config import Configuration, DEFAULT_CONFIG
 from glinerswift_spark.scoring.backends import get_backend
-from glinerswift_spark.scoring.pipeline import extract_document, extract_documents_batch
+from glinerswift_spark.scoring.pipeline import extract_documents_batch
 
 ENTITY_FIELDS = [
     StructField("label", StringType()),
@@ -48,6 +50,86 @@ ENTITY_FIELDS = [
 def entity_output_schema(df: DataFrame, id_cols: list[str]) -> StructType:
     id_fields = [f for f in df.schema.fields if f.name in set(id_cols)]
     return StructType(id_fields + ENTITY_FIELDS)
+
+
+def _widen_for_backend(df: DataFrame, key: str, backend_spec) -> DataFrame:
+    """widen_small_scan with the task-wave count this backend wants.
+
+    Parallelizes the inference pass when the scan is narrower than core
+    count (single-row-group test parquet) — a no-op at real scale, and
+    never a shuffle of the (much larger) output. A hidden_states_provider
+    means a real encoder: ~0.1-0.2 s/doc, so several task waves smooth
+    doc-length stragglers; the hash and gazetteer backends are scan-speed
+    and want exactly one wave (measured both ways — see
+    sources/pages.widen_small_scan)."""
+    from glinerswift_spark.sources.pages import (
+        STRAGGLER_WAVES,
+        widen_small_scan,
+    )
+
+    waves = (
+        STRAGGLER_WAVES
+        if getattr(backend_spec, "hidden_states_provider", None) is not None
+        else 1
+    )
+    return widen_small_scan(df, key, waves)
+
+
+def _extraction_kernel(
+    backend_spec,
+    text_col: str,
+    requests: Callable[[pd.DataFrame], list],
+    emit: Callable[[pd.DataFrame, list], object],
+    config: Configuration = DEFAULT_CONFIG,
+    label_groups: list[int] | None = None,
+) -> Callable[[Iterator[pd.DataFrame]], Iterator]:
+    """The per-partition extraction loop shared by every entry point.
+
+    ``requests(pdf)`` splits an Arrow batch into request groups
+    ``[(labels, threshold, row indices)]``; each group scores through
+    ``extract_documents_batch`` (cross-document batching on backends that
+    support it). ``emit(pdf, ents_per_row)`` turns the batch's per-row
+    entity lists into what the kernel yields."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator:
+        backend = get_backend(backend_spec)  # per-worker singleton
+        for pdf in batches:
+            texts = pdf[text_col].tolist()
+            ents_per_row: list = [None] * len(texts)
+            for labels, threshold, idxs in requests(pdf):
+                got = extract_documents_batch(
+                    [texts[i] for i in idxs], labels, backend,
+                    threshold=threshold, config=config,
+                    label_groups=label_groups,
+                )
+                for i, ents in zip(idxs, got):
+                    ents_per_row[i] = ents
+            yield emit(pdf, ents_per_row)
+
+    return run
+
+
+def _one_request(labels: list[str], threshold: float | None):
+    """``requests`` for a pass where every row asks the same question."""
+    return lambda pdf: [(labels, threshold, range(len(pdf)))]
+
+
+def _entity_rows(id_cols: list[str], out_cols: list[str]):
+    def emit(pdf: pd.DataFrame, ents_per_row: list) -> pd.DataFrame:
+        rows: dict[str, list] = {c: [] for c in out_cols}
+        ids = {c: pdf[c] for c in id_cols}
+        for i, ents in enumerate(ents_per_row):
+            for e in ents:
+                for c in id_cols:
+                    rows[c].append(ids[c].iat[i])
+                rows["label"].append(e.label)
+                rows["entity"].append(e.text)
+                rows["score"].append(e.score)
+                rows["start"].append(e.start)
+                rows["end"].append(e.end)
+        return pd.DataFrame(rows, columns=out_cols)
+
+    return emit
 
 
 def extract_entities(
@@ -66,53 +148,15 @@ def extract_entities(
     greedy NMS runs per group (task isolation for fused multi-task runs;
     see scoring/pipeline.extract_document)."""
     id_cols = list(id_cols or ["doc_id"])
-    labels = list(labels)
     out_schema = entity_output_schema(df, id_cols)
-    out_cols = [f.name for f in out_schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = get_backend(backend_spec)  # per-worker singleton
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in out_cols}
-            texts = pdf[text_col]
-            ids = {c: pdf[c] for c in id_cols}
-            ents_per_doc = extract_documents_batch(
-                texts.tolist(), labels, backend, threshold=threshold,
-                config=config, label_groups=label_groups,
-            )
-            for i, ents in enumerate(ents_per_doc):
-                for e in ents:
-                    for c in id_cols:
-                        rows[c].append(ids[c].iat[i])
-                    rows["label"].append(e.label)
-                    rows["entity"].append(e.text)
-                    rows["score"].append(e.score)
-                    rows["start"].append(e.start)
-                    rows["end"].append(e.end)
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    from glinerswift_spark.sources.pages import (
-        STRAGGLER_WAVES,
-        widen_small_scan,
+    run = _extraction_kernel(
+        backend_spec, text_col, _one_request(list(labels), threshold),
+        _entity_rows(id_cols, out_schema.fieldNames()), config, label_groups,
     )
-
-    # explicit narrow projection => column pruning reaches the scan;
-    # widen_small_scan parallelizes the inference pass when the scan is
-    # narrower than core count (single-row-group test parquet) — a no-op
-    # at real scale, and never a shuffle of the (much larger) output.
-    # A hidden_states_provider means a real encoder: ~0.1-0.2 s/doc, so
-    # several task waves smooth doc-length stragglers; the hash and
-    # gazetteer backends are scan-speed and want exactly one wave
-    # (measured both ways — see widen_small_scan).
-    waves = (
-        STRAGGLER_WAVES
-        if getattr(backend_spec, "hidden_states_provider", None) is not None
-        else 1
-    )
-    return (
-        widen_small_scan(df.select(*id_cols, text_col), id_cols[0], waves)
-        .mapInPandas(run, schema=out_schema)
-    )
+    # explicit narrow projection => column pruning reaches the scan
+    return _widen_for_backend(
+        df.select(*id_cols, text_col), id_cols[0], backend_spec
+    ).mapInPandas(run, schema=out_schema)
 
 
 def extract_entities_per_request(
@@ -137,36 +181,23 @@ def extract_entities_per_request(
     """
     id_cols = list(id_cols or ["id"])
     out_schema = entity_output_schema(df, id_cols)
-    out_cols = [f.name for f in out_schema.fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = get_backend(backend_spec)
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in out_cols}
-            has_thr = threshold_col in pdf.columns
-            request_groups: dict = {}
-            for i in range(len(pdf)):
-                raw_labels = pdf[labels_col].iat[i]
-                labels = () if raw_labels is None else tuple(raw_labels)
-                thr = float(pdf[threshold_col].iat[i]) if has_thr else None
-                request_groups.setdefault((labels, thr), []).append(i)
-            for (labels, thr), idxs in request_groups.items():
-                ents_per_doc = extract_documents_batch(
-                    [pdf[text_col].iat[i] for i in idxs], list(labels),
-                    backend, threshold=thr, config=config,
-                )
-                for i, ents in zip(idxs, ents_per_doc):
-                    for e in ents:
-                        for c in id_cols:
-                            rows[c].append(pdf[c].iat[i])
-                        rows["label"].append(e.label)
-                        rows["entity"].append(e.text)
-                        rows["score"].append(e.score)
-                        rows["start"].append(e.start)
-                        rows["end"].append(e.end)
-            yield pd.DataFrame(rows, columns=out_cols)
+    def requests(pdf: pd.DataFrame) -> list:
+        has_thr = threshold_col in pdf.columns
+        groups: dict = {}
+        for i, raw_labels in enumerate(pdf[labels_col]):
+            labels = () if raw_labels is None else tuple(raw_labels)
+            thr = float(pdf[threshold_col].iat[i]) if has_thr else None
+            groups.setdefault((labels, thr), []).append(i)
+        return [(list(lb), thr, idxs) for (lb, thr), idxs in groups.items()]
 
+    run = _extraction_kernel(
+        backend_spec, text_col, requests,
+        _entity_rows(id_cols, out_schema.fieldNames()), config,
+    )
     keep = [*id_cols, text_col, labels_col]
     if threshold_col in df.columns:
         keep.append(threshold_col)
-    return df.select(*keep).mapInPandas(run, schema=out_schema)
+    return _widen_for_backend(
+        df.select(*keep), id_cols[0], backend_spec
+    ).mapInPandas(run, schema=out_schema)

@@ -2,17 +2,20 @@
 
 The reference prints a per-request stage split —
 "Tokenize: Xms | Encode: Xms | Score: Xms | Decode: Xms"
-(ref GLiNERModel.swift:388-392). The Spark analogue: an instrumented
-mapInPandas pass that emits one row per (partition, stage) with the
-accumulated seconds and doc count; aggregating those rows gives the
-cluster-wide stage split. Used by bench.py; cheap enough to run on a
-sample in production (it re-runs extraction, so it is a PROFILING op,
-not a hook on the hot path)."""
+(ref GLiNERModel.swift:388-392). The Spark analogue: the shared
+extraction kernel (operators/extract.py) runs with the scoring pipeline's
+step functions wrapped in self-timers, and each partition emits one row
+per stage with the accumulated seconds and doc count; aggregating those
+rows gives the cluster-wide stage split. Used by bench.py; cheap enough
+to run on a sample in production (it re-runs extraction, so it is a
+PROFILING op, not a hook on the hot path)."""
 
 from __future__ import annotations
 
 import time
+from contextlib import ExitStack
 from typing import Iterator
+from unittest import mock
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -25,16 +28,28 @@ from pyspark.sql.types import (
 )
 
 from glinerswift_spark.config import Configuration, DEFAULT_CONFIG
-from glinerswift_spark.functions.chunker import chunk_text, should_chunk
-from glinerswift_spark.functions.text import word_spans
-from glinerswift_spark.scoring.backends import get_backend
-from glinerswift_spark.scoring.core import (
-    decode_spans,
-    merge_chunk_entities,
-    shift_entities,
+from glinerswift_spark.operators.extract import (
+    _extraction_kernel,
+    _one_request,
+    _widen_for_backend,
 )
+from glinerswift_spark.scoring import pipeline
+from glinerswift_spark.scoring.backends import get_backend
 
 STAGES = ("split", "chunk", "score", "decode", "merge")
+
+# stage -> the callables extraction reaches it through: names in
+# scoring.pipeline's namespace, and methods of the backend (an encoding
+# backend's encode runs inside its score call and counts as score)
+_STAGE_CALLS = {
+    "split": (("pipeline", "word_spans"),),
+    "chunk": (("pipeline", "chunk_text"),),
+    "score": (("backend", "score_document"), ("backend", "score_document_sparse"),
+              ("backend", "score_documents")),
+    "decode": (("pipeline", "decode_spans"), ("pipeline", "decode_candidates"),
+               ("pipeline", "decode_document_logits")),
+    "merge": (("pipeline", "shift_entities"), ("pipeline", "merge_chunk_entities")),
+}
 
 TIMING_SCHEMA = StructType(
     [
@@ -46,48 +61,26 @@ TIMING_SCHEMA = StructType(
 )
 
 
-def _extract_timed(text, labels, backend, threshold, config, t):
-    t0 = time.perf_counter()
-    chunked = should_chunk(text, config.chunk_max_words)
-    chunks = (
-        chunk_text(
-            text,
-            config.chunk_max_characters,
-            config.chunk_overlap_characters,
-            config.chunk_max_words,
-        )
-        if chunked
-        else None
-    )
-    t1 = time.perf_counter()
-    t["chunk"] += t1 - t0
-    pieces = (
-        [(c.text, c.start) for c in chunks]
-        if chunks and len(chunks) > 1
-        else [(text, 0)]
-    )
-    per_chunk = []
-    for piece, off in pieces:
-        t0 = time.perf_counter()
-        spans = word_spans(piece)
-        t1 = time.perf_counter()
-        t["split"] += t1 - t0
-        if not spans:
-            per_chunk.append([])
-            continue
-        logits = backend.score_document(piece, spans, labels)
-        t2 = time.perf_counter()
-        t["score"] += t2 - t1
-        ents = decode_spans(logits, labels, threshold, piece, spans)
-        t3 = time.perf_counter()
-        t["decode"] += t3 - t2
-        per_chunk.append(shift_entities(ents, off))
-    t0 = time.perf_counter()
-    merged = (
-        merge_chunk_entities(per_chunk) if len(per_chunk) > 1 else per_chunk[0]
-    )
-    t["merge"] += time.perf_counter() - t0
-    return merged
+class _SelfTimer:
+    """Self seconds per stage of wrapped callables: a call's duration
+    minus the duration of the wrapped calls nested inside it."""
+
+    def __init__(self):
+        self.seconds = dict.fromkeys(STAGES, 0.0)
+        self._nested: list = []  # per open call: time of its wrapped children
+
+    def wrap(self, stage: str, fn):
+        def timed(*args, **kwargs):
+            self._nested.append(0.0)
+            t0 = time.perf_counter()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                dt = time.perf_counter() - t0
+                self.seconds[stage] += dt - self._nested.pop()
+                if self._nested:
+                    self._nested[-1] += dt
+        return timed
 
 
 def stage_timing_report(
@@ -99,38 +92,39 @@ def stage_timing_report(
     config: Configuration = DEFAULT_CONFIG,
 ) -> DataFrame:
     """-> (stage, seconds, docs, entities): cluster-wide stage split."""
-    labels = list(labels)
-    thr = config.threshold if threshold is None else threshold
+    kernel = _extraction_kernel(
+        backend_spec, text_col, _one_request(list(labels), threshold),
+        lambda pdf, ents: (sum(map(bool, pdf[text_col])), sum(map(len, ents))),
+        config,
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = get_backend(backend_spec)
-        t = {s: 0.0 for s in STAGES}
-        docs = 0
-        ents = 0
-        for pdf in batches:
-            for text in pdf[text_col]:
-                if not text:
-                    continue
-                ents += len(_extract_timed(text, labels, backend, thr, config, t))
-                docs += 1
+        owners = {"pipeline": pipeline, "backend": get_backend(backend_spec)}
+        timer = _SelfTimer()
+        # a Python worker runs one task at a time, and every patch is
+        # undone when the partition ends
+        with ExitStack() as patches:
+            for stage, targets in _STAGE_CALLS.items():
+                for owner, name in targets:
+                    fn = getattr(owners[owner], name, None)
+                    if fn is not None:
+                        patches.enter_context(mock.patch.object(
+                            owners[owner], name, timer.wrap(stage, fn)))
+            counts = list(kernel(batches))
         yield pd.DataFrame(
             {
                 "stage": list(STAGES),
-                "seconds": [t[s] for s in STAGES],
-                "docs": [docs] * len(STAGES),
-                "entities": [ents] * len(STAGES),
+                "seconds": [timer.seconds[s] for s in STAGES],
+                "docs": [sum(d for d, _ in counts)] * len(STAGES),
+                "entities": [sum(e for _, e in counts)] * len(STAGES),
             }
         )
 
-    from glinerswift_spark.sources.pages import widen_small_scan
-
-    # widen when the scan is narrower than core count (a single-row-group
-    # parquet ran the whole instrumented pass on one task; no-op at
-    # scale). Keyed on the text itself — the only column this pass ships.
-    # Stage sums/doc counts are invariant to partitioning.
-    per_partition = widen_small_scan(df.select(text_col), text_col).mapInPandas(
-        run, TIMING_SCHEMA
-    )
+    # keyed on the text itself — the only column this pass ships. Stage
+    # sums/doc counts are invariant to partitioning.
+    per_partition = _widen_for_backend(
+        df.select(text_col), text_col, backend_spec
+    ).mapInPandas(run, TIMING_SCHEMA)
     return per_partition.groupBy("stage").agg(
         F.round(F.sum("seconds"), 4).alias("seconds"),
         F.sum("docs").alias("docs"),

@@ -1,25 +1,28 @@
 """Flagship KG-construction pipeline compositions.
 
-Two equivalent shapes:
+Extraction feeds one KG tail:
 
 ``extract_triples_fused``
     documents -> mapInPandas(chunk + score + NMS + merge + relation
     templating) -> triples. ZERO shuffles from scan to triples — the whole
-    per-document dataflow runs inside one task. This is the 100 TB path:
-    at a trillion documents, any per-stage materialization/shuffle of
-    entity rows would dominate; fusing keeps the only shuffles in the
-    (much smaller) downstream graph stages.
+    per-document dataflow runs inside one task (the shared extraction
+    kernel of operators/extract.py with a triple emitter). This is the
+    100 TB path: at a trillion documents, any per-stage
+    materialization/shuffle of entity rows would dominate; fusing keeps
+    the only shuffles in the (much smaller) downstream graph stages.
 
-``build_kg``
-    the composable version: extract -> triples (self-join) -> linking ->
-    connected components -> nodes/edges. Each stage is a pure
-    DataFrame -> DataFrame transform (foreachBatch-compatible).
+``link_and_materialize``
+    the one KG tail: mentions + triples -> linking (LSH blocking, cosine
+    verify, connected components) -> surface canonicalization -> nodes and
+    edges. ``build_kg`` (full build), ``update_kg`` (incremental: prior
+    snapshot unioned with a new batch) and ``jobs/run_kg.py`` all end in
+    it. Each stage is a pure DataFrame -> DataFrame transform
+    (foreachBatch-compatible).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -29,15 +32,29 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from glinerswift_spark.config import Configuration, DEFAULT_CONFIG, RelationConfig
-from glinerswift_spark.operators.extract import extract_entities
+from glinerswift_spark.config import (
+    Configuration,
+    DEFAULT_CONFIG,
+    LinkingConfig,
+    RelationConfig,
+)
+from glinerswift_spark.operators.extract import (
+    _extraction_kernel,
+    _one_request,
+    _widen_for_backend,
+    extract_entities,
+)
+from glinerswift_spark.operators.graph import (
+    materialize_edges,
+    mentions_from_entities,
+    surface_to_canonical,
+)
+from glinerswift_spark.operators.linking import link_mentions
 from glinerswift_spark.operators.relations import (
     build_pred_codes,
     emit_triples_coded,
     entities_to_triples,
 )
-from glinerswift_spark.scoring.backends import get_backend
-from glinerswift_spark.scoring.pipeline import extract_document, extract_documents_batch
 
 
 def triple_output_schema(df: DataFrame, doc_col: str) -> StructType:
@@ -65,64 +82,49 @@ def extract_triples_fused(
 ) -> DataFrame:
     """documents -> triples with zero shuffles (single mapInPandas stage)."""
     rcfg = relation_cfg or RelationConfig()
-    labels = list(labels)
     out_schema = triple_output_schema(df, doc_col)
-    cols = [f.name for f in out_schema.fields]
+    cols = out_schema.fieldNames()
+    pred_cats, tmap = build_pred_codes(rcfg)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        backend = get_backend(backend_spec)
-        pred_cats, tmap = build_pred_codes(rcfg)
-        window = rcfg.window_chars
-
-        for pdf in batches:
-            docs_np = pdf[doc_col].to_numpy()
-            texts = pdf[text_col]
-            # dictionary-encode the (heavily repeated) string columns AS
-            # codes while emitting: surface/pred appends are small cached
-            # ints, not strings, and Categorical.from_codes skips the
-            # factorization pass. Arrow then ships int codes + a small
-            # per-batch dictionary — at ~100 triples/doc this cuts both
-            # the python->JVM IPC volume and the per-triple Python object
-            # churn (the measured scaling bottleneck: allocator/kernel
-            # time, not compute).
-            surf_code: dict[str, int] = {}
-            subj_c: list[int] = []
-            pred_c: list[int] = []
-            obj_c: list[int] = []
-            scores: list[float] = []
-            counts = np.zeros(len(pdf), dtype=np.int64)
-            # cross-document batched scoring when the backend supports it
-            # (neural path: one BiLSTM/FFN batch pass per 64 docs);
-            # falls back to per-doc extract_document otherwise
-            ents_per_doc = extract_documents_batch(
-                texts.tolist(), labels, backend, threshold=threshold,
-                config=config,
+    def emit(pdf: pd.DataFrame, ents_per_row: list) -> pd.DataFrame:
+        # dictionary-encode the (heavily repeated) string columns AS
+        # codes while emitting: surface/pred appends are small cached
+        # ints, not strings, and Categorical.from_codes skips the
+        # factorization pass. Arrow then ships int codes + a small
+        # per-batch dictionary — at ~100 triples/doc this cuts both
+        # the python->JVM IPC volume and the per-triple Python object
+        # churn (the measured scaling bottleneck: allocator/kernel
+        # time, not compute).
+        surf_code: dict[str, int] = {}
+        subj_c: list[int] = []
+        pred_c: list[int] = []
+        obj_c: list[int] = []
+        scores: list[float] = []
+        counts = np.zeros(len(pdf), dtype=np.int64)
+        for i, ents in enumerate(ents_per_row):
+            counts[i] = emit_triples_coded(
+                ents, tmap, rcfg.window_chars, surf_code,
+                subj_c, pred_c, obj_c, scores,
             )
-            for i, ents in enumerate(ents_per_doc):
-                counts[i] = emit_triples_coded(
-                    ents, tmap, window, surf_code, subj_c, pred_c, obj_c, scores
-                )
-            cats = list(surf_code)
-            yield pd.DataFrame(
-                {
-                    cols[0]: pd.Categorical.from_codes(subj_c, cats),
-                    cols[1]: pd.Categorical.from_codes(pred_c, pred_cats),
-                    cols[2]: pd.Categorical.from_codes(obj_c, cats),
-                    cols[3]: np.repeat(docs_np, counts),
-                    cols[4]: scores,
-                }
-            )
+        cats = list(surf_code)
+        return pd.DataFrame(
+            {
+                cols[0]: pd.Categorical.from_codes(subj_c, cats),
+                cols[1]: pd.Categorical.from_codes(pred_c, pred_cats),
+                cols[2]: pd.Categorical.from_codes(obj_c, cats),
+                cols[3]: np.repeat(pdf[doc_col].to_numpy(), counts),
+                cols[4]: scores,
+            }
+        )
 
-    from glinerswift_spark.sources.pages import widen_small_scan
-
-    # widen when the scan is narrower than core count (no-op at scale);
-    # the triple OUTPUT is never shuffled — zero exchanges above the UDF
-    return (
-        widen_small_scan(df.select(doc_col, text_col), doc_col)
-        .mapInPandas(run, schema=out_schema)
+    run = _extraction_kernel(
+        backend_spec, text_col, _one_request(list(labels), threshold), emit,
+        config,
     )
+    # the triple OUTPUT is never shuffled — zero exchanges above the UDF
+    return _widen_for_backend(
+        df.select(doc_col, text_col), doc_col, backend_spec
+    ).mapInPandas(run, schema=out_schema)
 
 
 def extract_and_link(
@@ -183,6 +185,29 @@ def attach_embeddings(
     return keyed.join(F.broadcast(emb), "vec_id", "left").drop("vec_id")
 
 
+def link_and_materialize(
+    mentions: DataFrame,
+    triples: DataFrame,
+    doc_col: str = "doc_id",
+    linking_cfg: LinkingConfig | None = None,
+) -> dict:
+    """The KG tail shared by full and incremental builds: link the
+    embedded mentions (operators/linking.link_mentions), map every
+    surface to its canonical node, and materialize the triples as
+    canonical edges. Returns the inputs alongside the outputs
+    (mentions, triples, mention_map, nodes, edges, verified_pairs)."""
+    mention_map, nodes, verified = link_mentions(mentions, linking_cfg)
+    surface_map = surface_to_canonical(mentions.join(mention_map, "mention_id"))
+    return {
+        "mentions": mentions,
+        "triples": triples,
+        "mention_map": mention_map,
+        "nodes": nodes,
+        "edges": materialize_edges(triples, surface_map, doc_col),
+        "verified_pairs": verified,
+    }
+
+
 def build_kg(
     documents: DataFrame,
     embeddings: DataFrame,
@@ -202,15 +227,6 @@ def build_kg(
     operators/checkpoint.py for the resumable materialization wrapper).
     ``entities`` (optional) skips the extraction stage — see
     extract_and_link."""
-    from glinerswift_spark.config import LinkingConfig
-    from glinerswift_spark.operators.graph import (
-        materialize_edges,
-        mentions_from_entities,
-        surface_to_canonical,
-    )
-    from glinerswift_spark.operators.linking import link_mentions
-
-    lcfg = linking_cfg or LinkingConfig()
     entities, triples = extract_and_link(
         documents, labels, backend_spec,
         text_col=text_col, doc_col=doc_col, threshold=threshold,
@@ -219,19 +235,9 @@ def build_kg(
     mentions = attach_embeddings(
         mentions_from_entities(entities, doc_col), embeddings
     )
-    mention_map, nodes, verified = link_mentions(mentions, lcfg)
-    surface_map = surface_to_canonical(
-        mentions.join(mention_map, "mention_id")
-    )
-    edges = materialize_edges(triples, surface_map, doc_col)
     return {
         "entities": entities,
-        "triples": triples,
-        "mentions": mentions,
-        "mention_map": mention_map,
-        "nodes": nodes,
-        "edges": edges,
-        "verified_pairs": verified,
+        **link_and_materialize(mentions, triples, doc_col, linking_cfg),
     }
 
 
@@ -253,7 +259,8 @@ def update_kg(
     build. Extraction — the dominant cost, mapInPandas over every page —
     runs ONLY on the new documents; the prior run's materialized
     `mentions` / `triples` relations (parquet from the checkpointed
-    stages) are unioned in, and the comparatively cheap GLOBAL stages
+    stages) are unioned in as they are (the prior mentions already carry
+    their embeddings), and the comparatively cheap GLOBAL stages
     (LSH blocking + cosine verify + connected components + node/edge
     aggregation) re-run over the union, because linking is inherently
     corpus-global (a new mention can merge two old clusters).
@@ -266,15 +273,6 @@ def update_kg(
     canonical = min id) make the re-link reproduce the full build's ids
     exactly — re-running a batch is idempotent, per the north rule.
     """
-    from glinerswift_spark.config import LinkingConfig
-    from glinerswift_spark.operators.graph import (
-        materialize_edges,
-        mentions_from_entities,
-        surface_to_canonical,
-    )
-    from glinerswift_spark.operators.linking import link_mentions
-
-    lcfg = linking_cfg or LinkingConfig()
     new_entities, new_triples = extract_and_link(
         new_documents, labels, backend_spec,
         text_col=text_col, doc_col=doc_col, threshold=threshold,
@@ -283,21 +281,11 @@ def update_kg(
     new_mentions = attach_embeddings(
         mentions_from_entities(new_entities, doc_col), embeddings
     )
-    mentions = prior_mentions.unionByName(new_mentions)
-    triples = prior_triples.unionByName(new_triples)
-    mention_map, nodes, verified = link_mentions(mentions, lcfg)
-    surface_map = surface_to_canonical(
-        mentions.join(mention_map, "mention_id")
+    return link_and_materialize(
+        prior_mentions.unionByName(new_mentions),
+        prior_triples.unionByName(new_triples),
+        doc_col, linking_cfg,
     )
-    edges = materialize_edges(triples, surface_map, doc_col)
-    return {
-        "mentions": mentions,
-        "triples": triples,
-        "mention_map": mention_map,
-        "nodes": nodes,
-        "edges": edges,
-        "verified_pairs": verified,
-    }
 
 
 def top_relations(triples: DataFrame) -> DataFrame:

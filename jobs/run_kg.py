@@ -57,14 +57,10 @@ def main():
     from glinerswift_spark.plans.kg_pipeline import (
         attach_embeddings,
         extract_triples_fused,
+        link_and_materialize,
     )
     from glinerswift_spark.operators.extract import extract_entities
-    from glinerswift_spark.operators.graph import (
-        materialize_edges,
-        mentions_from_entities,
-        surface_to_canonical,
-    )
-    from glinerswift_spark.operators.linking import link_mentions
+    from glinerswift_spark.operators.graph import mentions_from_entities
     from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
     from glinerswift_spark.sources.pages import read_pages, repartition_salted, write_table
 
@@ -131,14 +127,11 @@ def main():
         # cumulative snapshot so the NEXT incremental run can chain
         write_table(triples_flat, os.path.join(args.output, "triples_all"))
         triples_flat = spark.read.parquet(os.path.join(args.output, "triples_all"))
-    mention_map, nodes, _ = link_mentions(mentions)
-    surface_map = surface_to_canonical(mentions.join(mention_map, "mention_id"))
-    edges = materialize_edges(triples_flat, surface_map, args.doc_col)
+    kg = link_and_materialize(mentions, triples_flat, args.doc_col)
 
     # the mentions snapshot is what the NEXT incremental run unions with
-    write_table(mentions, os.path.join(args.output, "mentions"))
-    write_table(nodes, os.path.join(args.output, "nodes"))
-    write_table(edges, os.path.join(args.output, "edges"))
+    for name in ("mentions", "nodes", "edges"):
+        write_table(kg[name], os.path.join(args.output, name))
     n_nodes = spark.read.parquet(os.path.join(args.output, "nodes")).count()
     n_edges = spark.read.parquet(os.path.join(args.output, "edges")).count()
     print(f"KG complete: {n_nodes} nodes, {n_edges} edges -> {args.output}")

@@ -30,15 +30,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from glinerswift_spark.operators.checkpoint import run_stage_with_checkpoint
-from glinerswift_spark.operators.graph import (
-    materialize_edges,
-    mentions_from_entities,
-    surface_to_canonical,
-)
-from glinerswift_spark.operators.linking import link_mentions
+from glinerswift_spark.operators.graph import mentions_from_entities
 from glinerswift_spark.plans.kg_pipeline import (
     attach_embeddings,
     extract_triples_fused,
+    link_and_materialize,
 )
 from glinerswift_spark.operators.extract import extract_entities
 from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
@@ -78,16 +74,14 @@ def _publish(spark, docs, out, fail_before=None):
         docs, FLAGSHIP_LABELS, spec, id_cols=["doc_id"], threshold=0.5
     )
     mentions = attach_embeddings(mentions_from_entities(entities, "doc_id"), _emb(spark))
-    mention_map, nodes, _ = link_mentions(mentions)
-    surface_map = surface_to_canonical(mentions.join(mention_map, "mention_id"))
-    edges = materialize_edges(triples, surface_map, "doc_id")
-    write_table(mentions, os.path.join(out, "mentions"))
+    kg = link_and_materialize(mentions, triples, "doc_id")
+    write_table(kg["mentions"], os.path.join(out, "mentions"))
     if fail_before == "nodes":
         raise RuntimeError("injected kill: mentions published, nodes not")
-    write_table(nodes, os.path.join(out, "nodes"))
+    write_table(kg["nodes"], os.path.join(out, "nodes"))
     if fail_before == "edges":
         raise RuntimeError("injected kill: nodes published, edges not")
-    write_table(edges, os.path.join(out, "edges"))
+    write_table(kg["edges"], os.path.join(out, "edges"))
 
 
 def _final_tables(spark, out):

@@ -100,7 +100,9 @@ def _fixture_word_alignment(case: dict):
     return words, tokens, hidden, piece_word, first_row
 
 
-@pytest.fixture(params=[c["id"] for c in _cases()])
+# params are read at collection time: without the fixture file there are
+# no cases, and the module-level skipif reports every test as skipped
+@pytest.fixture(params=[c["id"] for c in _cases()] if FIXTURES.exists() else [])
 def case(request):
     return next(c for c in _cases() if c["id"] == request.param)
 

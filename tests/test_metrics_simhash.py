@@ -1,11 +1,24 @@
 """Stage-timing metrics + simhash operator."""
 
+import random
+import string
+
+import pytest
 from pyspark.sql import functions as F
 
+from glinerswift_spark.config import DEFAULT_CONFIG
+from glinerswift_spark.functions.schema_encoding import EncodingOverflowError
+from glinerswift_spark.functions.text import word_spans
 from glinerswift_spark.operators.dedup import simhash16, simhash_pairs
+from glinerswift_spark.operators.extract import extract_entities
 from glinerswift_spark.operators.metrics import STAGES, stage_timing_report
 from glinerswift_spark.functions.hashing import words_col
-from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
+from glinerswift_spark.scoring.backends import (
+    FLAGSHIP_LABELS,
+    PromptEncodingSpec,
+    flagship_gazetteer,
+)
+from glinerswift_spark.scoring.encoder import FileEncoderProvider, NumpyEncoder
 from glinerswift_spark.sources.pages import read_documents
 
 
@@ -19,6 +32,42 @@ def test_stage_timing_report(spark, sf_dir):
     assert rows["score"].entities > 0
     # scoring should dominate split/merge for this corpus
     assert rows["score"].seconds > 0
+
+
+def test_stage_timing_report_times_the_real_extraction_path(spark, tmp_path):
+    """The report runs the same extraction as extract_entities, including
+    the re-chunking of a document that fits the word budget but overflows
+    the encoder's subword window (a private copy of the pipeline without
+    that handling raised EncodingOverflowError here)."""
+    NumpyEncoder.seeded(dim=16, n_layers=1, vocab=64).save(str(tmp_path))
+    spec = PromptEncodingSpec(
+        dim=16,
+        hidden_states_provider=FileEncoderProvider(weights_dir=str(tmp_path)),
+    )
+    labels = ["person", "organization"]
+    rng = random.Random(0)
+    dense = " ".join(
+        "".join(rng.choice(string.ascii_lowercase) for _ in range(rng.randint(8, 14)))
+        for _ in range(200)
+    )
+    spans = word_spans(dense)
+    assert len(spans) <= DEFAULT_CONFIG.chunk_max_words
+    with pytest.raises(EncodingOverflowError):
+        spec.build().score_document(dense, spans, labels)
+
+    df = spark.createDataFrame(
+        [(0, dense), (1, "john smith works at apple in cupertino"), (2, None)],
+        "doc_id long, text string",
+    )
+    rows = {
+        r.stage: r
+        for r in stage_timing_report(df, labels, spec, threshold=0.3).collect()
+    }
+    assert set(rows) == set(STAGES)
+    n_entities = extract_entities(df, labels, spec, threshold=0.3).count()
+    assert n_entities > 0
+    assert {r.entities for r in rows.values()} == {n_entities}
+    assert {r.docs for r in rows.values()} == {2}
 
 
 def test_simhash_identical_and_different(spark):

@@ -18,6 +18,7 @@ uniform per-piece score standing in for the trained scores.
 """
 
 import json
+from pathlib import Path
 
 import pytest
 
@@ -25,6 +26,10 @@ from glinerswift_spark.functions.subword import UnigramTokenizer
 
 FIXTURES = "/root/reference/Tests/GLiNERSwiftTests/Fixtures/python_outputs.json"
 CLS_ID, SEP_ID, UNK_ID = 1, 2, 3
+
+pytestmark = pytest.mark.skipif(
+    not Path(FIXTURES).exists(), reason="reference fixtures not available"
+)
 
 
 @pytest.fixture(scope="module")
