@@ -103,7 +103,7 @@ def _entities_cached(spark, sf_dir):
 
 
 def _kg_cached(spark, sf_dir):
-    """Memoized build_kg over the cached extraction; mention_map (the
+    """Memoized KG tail over the cached extraction; mention_map (the
     connected-components output every downstream consumer re-joins) is
     additionally persisted — nodes, edges, centroids, timespans and
     negatives all embed it in their plans."""
@@ -112,13 +112,9 @@ def _kg_cached(spark, sf_dir):
     if kg is None:
         from pyspark.storagelevel import StorageLevel
 
-        from glinerswift_spark.plans.kg_pipeline import build_kg
+        from glinerswift_spark.plans.kg_pipeline import kg_from_entities
 
-        kg = build_kg(
-            _docs(spark, sf_dir), _emb(spark, sf_dir),
-            FLAGSHIP_LABELS, flagship_gazetteer(), threshold=THRESHOLD,
-            entities=_entities_cached(spark, sf_dir),
-        )
+        kg = kg_from_entities(_entities_cached(spark, sf_dir), _emb(spark, sf_dir))
         kg["mention_map"] = kg["mention_map"].persist(
             StorageLevel.MEMORY_AND_DISK
         )
@@ -572,17 +568,14 @@ def _q_kg_edge_diff(spark, sf_dir):
     prior one with the doc filter pushed into the extraction CTE) and
     full-outer-joins them."""
     from glinerswift_spark.operators.graph import edge_diff
-    from glinerswift_spark.plans.kg_pipeline import build_kg
+    from glinerswift_spark.plans.kg_pipeline import kg_from_entities
 
-    docs = _docs(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
     # extraction is per-document, so the prior corpus's entities are a
     # doc_id filter over the session-cached full extraction — the one
     # legitimate derivation that avoids a second full mapInPandas pass
-    old_kg = build_kg(
-        docs.where(F.col("doc_id") % 3 != 0), emb,
-        FLAGSHIP_LABELS, flagship_gazetteer(), threshold=THRESHOLD,
-        entities=_entities_cached(spark, sf_dir).where(F.col("doc_id") % 3 != 0),
+    old_kg = kg_from_entities(
+        _entities_cached(spark, sf_dir).where(F.col("doc_id") % 3 != 0),
+        _emb(spark, sf_dir),
     )
     new_kg = _kg_cached(spark, sf_dir)
     return edge_diff(old_kg["edges"], new_kg["edges"])

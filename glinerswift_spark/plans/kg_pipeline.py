@@ -1,30 +1,42 @@
 """Flagship KG-construction pipeline compositions.
 
-Extraction feeds one KG tail:
+Every KG build is extraction followed by one tail:
+
+``kg_from_entities``
+    entities -> triples (operators/relations.entities_to_triples) and
+    embedded mentions, optionally unioned with a prior snapshot's
+    mentions/triples -> linking (LSH blocking, cosine verify, connected
+    components) -> surface canonicalization -> nodes and edges. Each
+    stage is a pure DataFrame -> DataFrame transform
+    (foreachBatch-compatible).
+
+``build_kg`` / ``update_kg``
+    ``extract_entities`` over all documents (full build) or only a new
+    batch (incremental: the prior snapshot rides in as ``prior``), then
+    ``kg_from_entities``.
+
+``publish_kg``
+    the resumable job behind jobs/run_kg.py: 1. entities (checkpointed
+    per bucket) 2. ``kg_from_entities`` over the checkpoint, publishing
+    mentions/triples/nodes/edges.
 
 ``extract_triples_fused``
     documents -> mapInPandas(chunk + score + NMS + merge + relation
-    templating) -> triples. ZERO shuffles from scan to triples — the whole
-    per-document dataflow runs inside one task (the shared extraction
-    kernel of operators/extract.py with a triple emitter). This is the
-    100 TB path: at a trillion documents, any per-stage
-    materialization/shuffle of entity rows would dominate; fusing keeps
-    the only shuffles in the (much smaller) downstream graph stages.
-
-``link_and_materialize``
-    the one KG tail: mentions + triples -> linking (LSH blocking, cosine
-    verify, connected components) -> surface canonicalization -> nodes and
-    edges. ``build_kg`` (full build), ``update_kg`` (incremental: prior
-    snapshot unioned with a new batch) and ``jobs/run_kg.py`` all end in
-    it. Each stage is a pure DataFrame -> DataFrame transform
-    (foreachBatch-compatible).
+    templating) -> triples with ZERO shuffles — the whole per-document
+    dataflow runs inside one task (the shared extraction kernel of
+    operators/extract.py with a dictionary-coded triple emitter). Used
+    where only triples are wanted: streaming micro-batches
+    (streaming/foreach_batch.py), the ``kg_triples`` driver query and the
+    extraction benchmarks.
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -38,6 +50,7 @@ from glinerswift_spark.config import (
     LinkingConfig,
     RelationConfig,
 )
+from glinerswift_spark.operators.checkpoint import run_stage_with_checkpoint
 from glinerswift_spark.operators.extract import (
     _extraction_kernel,
     _one_request,
@@ -55,6 +68,7 @@ from glinerswift_spark.operators.relations import (
     emit_triples_coded,
     entities_to_triples,
 )
+from glinerswift_spark.sources.pages import write_table
 
 
 def triple_output_schema(df: DataFrame, doc_col: str) -> StructType:
@@ -127,41 +141,7 @@ def extract_triples_fused(
     ).mapInPandas(run, schema=out_schema)
 
 
-def extract_and_link(
-    documents: DataFrame,
-    labels: list[str],
-    backend_spec,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    threshold: float | None = None,
-    config: Configuration = DEFAULT_CONFIG,
-    relation_cfg: RelationConfig | None = None,
-    entities: DataFrame | None = None,
-):
-    """Composable flagship: returns (entities, triples) DataFrames.
-
-    ``entities`` injects a precomputed (possibly persisted) extraction
-    relation — extraction is per-document, so a caller holding one
-    session-cached pass can fan out N downstream analytics without
-    paying N extraction re-runs (Spark shares no common subexpressions
-    across separately-built DataFrames)."""
-    if entities is None:
-        entities = extract_entities(
-            documents,
-            labels,
-            backend_spec,
-            text_col=text_col,
-            id_cols=[doc_col],
-            threshold=threshold,
-            config=config,
-        )
-    triples = entities_to_triples(entities, relation_cfg, doc_col=doc_col)
-    return entities, triples
-
-
-def attach_embeddings(
-    mentions: DataFrame, embeddings: DataFrame, n_vecs: int | None = None
-) -> DataFrame:
+def attach_embeddings(mentions: DataFrame, embeddings: DataFrame) -> DataFrame:
     """Deterministic surface->embedding assignment (FIXTURES.md §5): each
     distinct lowercased surface maps to
     embeddings[int(md5(surface)[:8], 16) % N]. Same surface => identical
@@ -170,35 +150,46 @@ def attach_embeddings(
     xxhash64) so the DuckDB oracle replays the assignment exactly:
     CAST(concat('0x', substring(md5(surface), 1, 8)) AS BIGINT) % N.
     The embeddings side is broadcast (it is the small dimension table)."""
-    if n_vecs is None:
-        n_vecs = embeddings.count()
     keyed = mentions.withColumn(
         "vec_id",
         F.pmod(
             F.conv(F.substring(F.md5(F.lower(F.col("text"))), 1, 8), 16, 10).cast(
                 "long"
             ),
-            F.lit(n_vecs),
+            F.lit(embeddings.count()),
         ),
     )
     emb = embeddings.select("vec_id", "embedding")
     return keyed.join(F.broadcast(emb), "vec_id", "left").drop("vec_id")
 
 
-def link_and_materialize(
-    mentions: DataFrame,
-    triples: DataFrame,
+def kg_from_entities(
+    entities: DataFrame,
+    embeddings: DataFrame,
     doc_col: str = "doc_id",
+    relation_cfg: RelationConfig | None = None,
     linking_cfg: LinkingConfig | None = None,
+    prior: tuple[DataFrame, DataFrame] | None = None,
 ) -> dict:
-    """The KG tail shared by full and incremental builds: link the
-    embedded mentions (operators/linking.link_mentions), map every
-    surface to its canonical node, and materialize the triples as
-    canonical edges. Returns the inputs alongside the outputs
-    (mentions, triples, mention_map, nodes, edges, verified_pairs)."""
+    """The one KG tail: entities -> triples and embedded mentions, unioned
+    with the ``prior`` snapshot's ``(mentions, triples)`` if given (prior
+    mentions already carry their embeddings and pass through unchanged),
+    then linking (LSH blocking, cosine verify, connected components) ->
+    surface canonicalization -> canonical edges. Returns every
+    intermediate (entities, mentions, triples, mention_map, nodes, edges,
+    verified_pairs)."""
+    triples = entities_to_triples(entities, relation_cfg, doc_col=doc_col)
+    mentions = attach_embeddings(
+        mentions_from_entities(entities, doc_col), embeddings
+    )
+    if prior is not None:
+        prior_mentions, prior_triples = prior
+        mentions = prior_mentions.unionByName(mentions)
+        triples = prior_triples.unionByName(triples)
     mention_map, nodes, verified = link_mentions(mentions, linking_cfg)
     surface_map = surface_to_canonical(mentions.join(mention_map, "mention_id"))
     return {
+        "entities": entities,
         "mentions": mentions,
         "triples": triples,
         "mention_map": mention_map,
@@ -219,26 +210,18 @@ def build_kg(
     config: Configuration = DEFAULT_CONFIG,
     relation_cfg: RelationConfig | None = None,
     linking_cfg=None,
-    entities: DataFrame | None = None,
 ) -> dict:
     """Full north-rule pipeline: documents -> entities -> triples ->
     linking -> connected components -> nodes/edges. Returns every
-    intermediate as a DataFrame (each a pure transform; see
-    operators/checkpoint.py for the resumable materialization wrapper).
-    ``entities`` (optional) skips the extraction stage — see
-    extract_and_link."""
-    entities, triples = extract_and_link(
-        documents, labels, backend_spec,
-        text_col=text_col, doc_col=doc_col, threshold=threshold,
-        config=config, relation_cfg=relation_cfg, entities=entities,
+    intermediate as a DataFrame (each a pure transform; ``publish_kg`` is
+    the checkpointed, resumable form)."""
+    entities = extract_entities(
+        documents, labels, backend_spec, text_col=text_col,
+        id_cols=[doc_col], threshold=threshold, config=config,
     )
-    mentions = attach_embeddings(
-        mentions_from_entities(entities, doc_col), embeddings
+    return kg_from_entities(
+        entities, embeddings, doc_col, relation_cfg, linking_cfg
     )
-    return {
-        "entities": entities,
-        **link_and_materialize(mentions, triples, doc_col, linking_cfg),
-    }
 
 
 def update_kg(
@@ -258,12 +241,11 @@ def update_kg(
     """Incremental KG maintenance: a new crawl batch arrives AFTER a full
     build. Extraction — the dominant cost, mapInPandas over every page —
     runs ONLY on the new documents; the prior run's materialized
-    `mentions` / `triples` relations (parquet from the checkpointed
-    stages) are unioned in as they are (the prior mentions already carry
-    their embeddings), and the comparatively cheap GLOBAL stages
-    (LSH blocking + cosine verify + connected components + node/edge
-    aggregation) re-run over the union, because linking is inherently
-    corpus-global (a new mention can merge two old clusters).
+    `mentions` / `triples` relations are unioned in as they are, and the
+    comparatively cheap GLOBAL stages (LSH blocking + cosine verify +
+    connected components + node/edge aggregation) re-run over the union,
+    because linking is inherently corpus-global (a new mention can merge
+    two old clusters).
 
     Equivalence to a full rebuild is structural, and pinned by test
     (tests/test_kg_pipeline.py::test_incremental_update_equals_full_rebuild):
@@ -273,19 +255,63 @@ def update_kg(
     canonical = min id) make the re-link reproduce the full build's ids
     exactly — re-running a batch is idempotent, per the north rule.
     """
-    new_entities, new_triples = extract_and_link(
-        new_documents, labels, backend_spec,
-        text_col=text_col, doc_col=doc_col, threshold=threshold,
-        config=config, relation_cfg=relation_cfg,
+    new_entities = extract_entities(
+        new_documents, labels, backend_spec, text_col=text_col,
+        id_cols=[doc_col], threshold=threshold, config=config,
     )
-    new_mentions = attach_embeddings(
-        mentions_from_entities(new_entities, doc_col), embeddings
+    return kg_from_entities(
+        new_entities, embeddings, doc_col, relation_cfg, linking_cfg,
+        prior=(prior_mentions, prior_triples),
     )
-    return link_and_materialize(
-        prior_mentions.unionByName(new_mentions),
-        prior_triples.unionByName(new_triples),
-        doc_col, linking_cfg,
-    )
+
+
+PUBLISHED_TABLES = ("mentions", "triples", "nodes", "edges")
+
+
+def publish_kg(
+    spark: SparkSession,
+    docs: DataFrame,
+    embeddings: DataFrame,
+    out: str,
+    labels: list[str],
+    backend_spec,
+    text_col: str = "text",
+    doc_col: str = "doc_id",
+    threshold: float | None = None,
+    buckets: int = 64,
+    lineage: str = "",
+    prior: str | None = None,
+) -> None:
+    """The resumable KG job (jobs/run_kg.py):
+
+    1. ``entities`` — extraction, checkpointed per bucket under ``out``
+       (operators/checkpoint.py); a resume extracts only the buckets not
+       yet marked done, so past this stage it extracts nothing;
+    2. ``kg_from_entities`` over the checkpoint, with the ``prior``
+       output directory's ``mentions``/``triples`` unioned in when given
+       (incremental update, equal to a full rebuild), then publish
+       ``mentions``, ``triples`` (always the cumulative set, so the next
+       incremental run can chain on this output), ``nodes`` and
+       ``edges``. Each publish is an idempotent overwrite.
+    """
+    # part_bucket rides through extraction as an id column, so the
+    # checkpoint needs no join back to the bucketed input
+    entities = run_stage_with_checkpoint(
+        spark, docs,
+        lambda d: extract_entities(
+            d, labels, backend_spec, text_col=text_col,
+            id_cols=[doc_col, "part_bucket"], threshold=threshold,
+        ),
+        out, "entities", doc_col, num_buckets=buckets, lineage=lineage,
+    ).drop("part_bucket")
+    if prior is not None:
+        prior = tuple(
+            spark.read.parquet(os.path.join(prior, name))
+            for name in ("mentions", "triples")
+        )
+    kg = kg_from_entities(entities, embeddings, doc_col, prior=prior)
+    for name in PUBLISHED_TABLES:
+        write_table(kg[name], os.path.join(out, name))
 
 
 def top_relations(triples: DataFrame) -> DataFrame:

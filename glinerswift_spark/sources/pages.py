@@ -71,7 +71,9 @@ def widen_small_scan(df: DataFrame, key: str, waves: int = 1) -> DataFrame:
     regression: 50 docs widened to 128 partitions). The row count costs
     one extra scan job, paid ONLY on the chunky-row path where the guard
     already established the input is a sub-core-count scan and per-row
-    inference cost dwarfs it.
+    inference cost dwarfs it; it counts at most ``waves * cores *
+    WIDEN_ROWS_PER_TASK`` rows (the count past which the cap no longer
+    binds), so the plan-build-time scan stays bounded.
     """
     if df.isStreaming:
         # partition introspection (df.rdd) is illegal on a streaming
@@ -84,7 +86,7 @@ def widen_small_scan(df: DataFrame, key: str, waves: int = 1) -> DataFrame:
         return df
     n = waves * cores
     if waves > 1:
-        n_rows = df.count()
+        n_rows = df.limit(n * WIDEN_ROWS_PER_TASK).count()
         n = min(n, max(cores, -(-n_rows // WIDEN_ROWS_PER_TASK)))
     return df.repartition(n, F.col(key))
 

@@ -172,27 +172,6 @@ def sessionize_stream(
     )
 
 
-def extract_triples_stream(
-    docs: DataFrame,
-    labels,
-    backend_spec,
-    threshold: float | None = None,
-) -> DataFrame:
-    """Streaming triple extraction: the SAME zero-shuffle fused
-    mapInPandas transform as the batch path (plans/kg_pipeline.
-    extract_triples_fused) applied to a streaming DataFrame — extraction
-    is stateless per-document, so the transform is directly
-    streaming-valid (no watermark, no state store) and the batch/stream
-    results are identical row sets (pinned by the twin test). Source:
-    streaming/foreach_batch.stream_documents. Downstream
-    global stages (linking, CC) run per landing batch via foreachBatch +
-    update_kg — see plans/kg_pipeline.update_kg for the incremental
-    contract."""
-    from glinerswift_spark.plans.kg_pipeline import extract_triples_fused
-
-    return extract_triples_fused(docs, labels, backend_spec, threshold=threshold)
-
-
 DEDUP_OUTPUT_DDL = "text_hash string, doc_id long"
 _DEDUP_STATE_DDL = "keeper long"
 

@@ -3,12 +3,15 @@
     spark-submit --py-files dist/glinerswift_spark.zip jobs/run_kg.py \
         --input /path/to/pages_or_documents --output /path/to/kg \
         [--input-format parquet|iceberg] [--doc-col doc_id] [--text-col text] \
-        [--threshold 0.5] [--buckets 64] [--salt-partitions N]
+        [--threshold 0.5] [--buckets 64] [--salt-partitions N] \
+        [--prior /path/to/previous/kg] [--analytics]
 
-Stages (each a write-audit-publish checkpointed step; re-running resumes
-from the last completed bucket set):
-  1. triples   — fused extraction (zero-shuffle mapInPandas)
-  2. nodes/edges — linking + connected components + materialization
+Stages (plans/kg_pipeline.publish_kg; re-running resumes from the last
+completed bucket set and publishes idempotently):
+  1. entities — extraction, checkpointed per bucket (write-audit-publish)
+  2. publish mentions/triples/nodes/edges — linking + connected
+     components + materialization over the checkpoint; ``triples`` is the
+     cumulative set, so a later ``--prior`` run can chain on this output
 """
 
 import argparse
@@ -47,20 +50,13 @@ def main():
              "crawl batch, extract just it, union the prior run's "
              "materialized mentions/triples, and re-run the global "
              "linking/canonicalization stages (incremental KG update; "
-             "equals a full rebuild — plans/kg_pipeline.update_kg)",
+             "equals a full rebuild — plans/kg_pipeline.publish_kg)",
     )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession, functions as F
 
-    from glinerswift_spark.operators.checkpoint import run_stage_with_checkpoint
-    from glinerswift_spark.plans.kg_pipeline import (
-        attach_embeddings,
-        extract_triples_fused,
-        link_and_materialize,
-    )
-    from glinerswift_spark.operators.extract import extract_entities
-    from glinerswift_spark.operators.graph import mentions_from_entities
+    from glinerswift_spark.plans.kg_pipeline import publish_kg
     from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
     from glinerswift_spark.sources.pages import read_pages, repartition_salted, write_table
 
@@ -77,61 +73,16 @@ def main():
     if args.salt_partitions:
         docs = repartition_salted(docs, args.doc_col, args.salt_partitions)
 
-    spec = flagship_gazetteer()
-
-    # stage 1: triples (checkpointed per bucket; resumes idempotently)
-    triples = run_stage_with_checkpoint(
-        spark,
-        docs,
-        lambda d: extract_triples_fused(
-            d, FLAGSHIP_LABELS, spec,
-            text_col=args.text_col, doc_col=args.doc_col,
-            threshold=args.threshold,
-        ),
-        args.output, "triples", args.doc_col, num_buckets=args.buckets,
-        lineage=f"input={args.input}",
-    )
-
-    # stage 2: entities -> linking -> nodes/edges
-    entities = extract_entities(
-        docs, FLAGSHIP_LABELS, spec,
-        text_col=args.text_col, id_cols=[args.doc_col],
-        threshold=args.threshold,
-    )
     emb_path = args.embeddings or os.path.join(
         os.path.dirname(args.input.rstrip("/")), "embeddings.parquet"
     )
-    embeddings = spark.read.parquet(emb_path)
-    mentions = attach_embeddings(
-        mentions_from_entities(entities, args.doc_col), embeddings
+    publish_kg(
+        spark, docs, spark.read.parquet(emb_path), args.output,
+        FLAGSHIP_LABELS, flagship_gazetteer(),
+        text_col=args.text_col, doc_col=args.doc_col,
+        threshold=args.threshold, buckets=args.buckets,
+        lineage=f"input={args.input}", prior=args.prior,
     )
-    triples_flat = triples.drop("part_bucket")
-    if args.prior:
-        # incremental: this run extracted ONLY the new batch; fold in the
-        # prior snapshot and re-run the (corpus-global) linking stages —
-        # a new mention can merge two old clusters, so linking cannot be
-        # per-batch. Deterministic min-id canonicalization makes the
-        # result identical to a full rebuild (pinned by
-        # tests/test_kg_pipeline.py::test_incremental_update_equals_full_rebuild).
-        # A chained prior (itself incremental) carries its cumulative
-        # triples in triples_all; a full-build prior's checkpointed
-        # triples stage IS the full set.
-        p_all = os.path.join(args.prior, "triples_all")
-        p_tri = p_all if os.path.isdir(p_all) else os.path.join(args.prior, "triples")
-        mentions = spark.read.parquet(
-            os.path.join(args.prior, "mentions")
-        ).unionByName(mentions)
-        triples_flat = (
-            spark.read.parquet(p_tri).drop("part_bucket").unionByName(triples_flat)
-        )
-        # cumulative snapshot so the NEXT incremental run can chain
-        write_table(triples_flat, os.path.join(args.output, "triples_all"))
-        triples_flat = spark.read.parquet(os.path.join(args.output, "triples_all"))
-    kg = link_and_materialize(mentions, triples_flat, args.doc_col)
-
-    # the mentions snapshot is what the NEXT incremental run unions with
-    for name in ("mentions", "nodes", "edges"):
-        write_table(kg[name], os.path.join(args.output, name))
     n_nodes = spark.read.parquet(os.path.join(args.output, "nodes")).count()
     n_edges = spark.read.parquet(os.path.join(args.output, "edges")).count()
     print(f"KG complete: {n_nodes} nodes, {n_edges} edges -> {args.output}")

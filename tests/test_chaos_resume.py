@@ -1,4 +1,5 @@
-"""Chaos-grade resume contract: inject failures at stage boundaries and
+"""Chaos-grade resume contract: inject failures at stage boundaries of the
+real KG job (plans/kg_pipeline.publish_kg, what jobs/run_kg.py runs) and
 assert the resumed run publishes IDENTICAL final tables.
 
 The north rule demands per-partition checkpointed, idempotently
@@ -6,20 +7,23 @@ resumable stages. The existing tests kill inside one checkpointed stage
 (test_spark_ops / test_pages_requests_legacy); these kill at the
 BOUNDARIES the judge called out:
 
-  1. after the triples checkpoint stage, before any linking output —
-     resume must skip every done bucket and still publish identical
-     nodes/edges;
+  1. after the entities checkpoint stage, before anything is published —
+     resume must skip every done bucket (and extract nothing) and still
+     publish identical tables;
   2. BETWEEN connected-components rounds (mid-linking kill, injected by
      making localCheckpoint raise after N calls) — CC is a pure
      transform over checkpointed inputs, so a clean retry must converge
      to the identical labelling;
-  3. between write-audit-publish steps (mentions written, nodes written,
-     killed before edges) — re-publish overwrites idempotently;
-  4. mid-incremental-update (prior snapshot + new batch, killed after
-     the cumulative triples snapshot, before nodes/edges).
+  3. between write-audit-publish steps (mentions/triples written, killed
+     before nodes; nodes written, killed before edges) — re-publish
+     overwrites idempotently;
+  4. mid-incremental-update (``publish_kg(prior=...)``, killed after the
+     cumulative triples are published, before nodes/edges).
 
-All comparisons are row-level over every column (sorted tuples) — the
-determinism contract that makes retry-anywhere safe.
+Kills are injected by monkeypatching: the publish write of a named table
+(``kg_pipeline.write_table``) or ``localCheckpoint``. All comparisons are
+row-level over every column (sorted tuples) — the determinism contract
+that makes retry-anywhere safe.
 """
 
 from __future__ import annotations
@@ -29,16 +33,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from glinerswift_spark.operators.checkpoint import run_stage_with_checkpoint
-from glinerswift_spark.operators.graph import mentions_from_entities
-from glinerswift_spark.plans.kg_pipeline import (
-    attach_embeddings,
-    extract_triples_fused,
-    link_and_materialize,
-)
-from glinerswift_spark.operators.extract import extract_entities
+from glinerswift_spark.plans import kg_pipeline
+from glinerswift_spark.plans.kg_pipeline import publish_kg
 from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
-from glinerswift_spark.sources.pages import write_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -59,37 +56,37 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def _publish(spark, docs, out, fail_before=None):
-    """The run_kg.py stage sequence as library calls, with an optional
-    kill switch before a named publish step."""
-    spec = flagship_gazetteer()
-    triples = run_stage_with_checkpoint(
-        spark, docs,
-        lambda d: extract_triples_fused(d, FLAGSHIP_LABELS, spec, threshold=0.5),
-        out, "triples", "doc_id", num_buckets=8, lineage="chaos",
-    ).drop("part_bucket")
-    if fail_before == "linking":
-        raise RuntimeError("injected kill: after triples, before linking")
-    entities = extract_entities(
-        docs, FLAGSHIP_LABELS, spec, id_cols=["doc_id"], threshold=0.5
+def _publish(spark, docs, out, prior=None):
+    publish_kg(
+        spark, docs, _emb(spark), out, FLAGSHIP_LABELS, flagship_gazetteer(),
+        threshold=0.5, buckets=8, lineage="chaos", prior=prior,
     )
-    mentions = attach_embeddings(mentions_from_entities(entities, "doc_id"), _emb(spark))
-    kg = link_and_materialize(mentions, triples, "doc_id")
-    write_table(kg["mentions"], os.path.join(out, "mentions"))
-    if fail_before == "nodes":
-        raise RuntimeError("injected kill: mentions published, nodes not")
-    write_table(kg["nodes"], os.path.join(out, "nodes"))
-    if fail_before == "edges":
-        raise RuntimeError("injected kill: nodes published, edges not")
-    write_table(kg["edges"], os.path.join(out, "edges"))
+
+
+def _kill_publish_of(monkeypatch, table):
+    """Make the publish write of ``table`` raise (the tables before it in
+    publish order are written)."""
+    real_write = kg_pipeline.write_table
+
+    def write(df, path, *args, **kwargs):
+        if os.path.basename(path) == table:
+            raise RuntimeError(f"injected kill: before publishing {table}")
+        return real_write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(kg_pipeline, "write_table", write)
 
 
 def _final_tables(spark, out):
     return (
         _rows(spark.read.parquet(os.path.join(out, "nodes"))),
         _rows(spark.read.parquet(os.path.join(out, "edges"))),
-        _rows(spark.read.parquet(os.path.join(out, "triples"))
-              .drop("part_bucket")),
+        _rows(spark.read.parquet(os.path.join(out, "triples"))),
+    )
+
+
+def _done_buckets(spark, out):
+    return _rows(
+        spark.read.parquet(os.path.join(out, "_STATUS")).select("part_bucket")
     )
 
 
@@ -100,29 +97,53 @@ def clean_run(spark, tmp_path_factory):
     return _final_tables(spark, out)
 
 
-def test_kill_between_triples_and_linking(spark, tmp_path, clean_run):
+def test_kill_between_entities_and_publish(spark, tmp_path, clean_run, monkeypatch):
     out = str(tmp_path / "kg")
-    with pytest.raises(RuntimeError, match="before linking"):
-        _publish(spark, _docs(spark), out, fail_before="linking")
-    # triples stage committed its buckets; nothing else exists yet
-    assert os.path.isdir(os.path.join(out, "triples"))
-    assert not os.path.isdir(os.path.join(out, "nodes"))
-    done_before = _rows(
-        spark.read.parquet(os.path.join(out, "_STATUS")).select("part_bucket")
+    _kill_publish_of(monkeypatch, "mentions")
+    with pytest.raises(RuntimeError, match="before publishing mentions"):
+        _publish(spark, _docs(spark), out)
+    monkeypatch.undo()
+    # entities stage committed its buckets; nothing is published yet
+    assert os.path.isdir(os.path.join(out, "entities"))
+    assert not any(
+        os.path.isdir(os.path.join(out, t)) for t in kg_pipeline.PUBLISHED_TABLES
     )
+    done_before = _done_buckets(spark, out)
     _publish(spark, _docs(spark), out)  # resume
-    # resume did NOT re-run any triples bucket (status rows unchanged)
-    assert _rows(
-        spark.read.parquet(os.path.join(out, "_STATUS")).select("part_bucket")
-    ) == done_before
+    # resume did NOT re-run any entities bucket (status rows unchanged)
+    assert _done_buckets(spark, out) == done_before
+    assert _final_tables(spark, out) == clean_run
+
+
+def test_resume_past_entity_checkpoint_extracts_nothing(
+    spark, tmp_path, clean_run, monkeypatch
+):
+    """Once the entities checkpoint is complete, a resume builds every
+    published table from it: with the extraction kernel made to raise,
+    the resumed run still publishes the clean run's tables."""
+    from glinerswift_spark.operators import extract
+
+    out = str(tmp_path / "kg")
+    _kill_publish_of(monkeypatch, "nodes")
+    with pytest.raises(RuntimeError, match="before publishing nodes"):
+        _publish(spark, _docs(spark), out)
+    monkeypatch.undo()
+
+    def no_extraction(*args, **kwargs):
+        raise AssertionError("resume re-ran extraction")
+
+    monkeypatch.setattr(extract, "_extraction_kernel", no_extraction)
+    _publish(spark, _docs(spark), out)  # resume
     assert _final_tables(spark, out) == clean_run
 
 
 @pytest.mark.parametrize("boundary", ["nodes", "edges"])
-def test_kill_between_publish_steps(spark, tmp_path, clean_run, boundary):
+def test_kill_between_publish_steps(spark, tmp_path, clean_run, monkeypatch, boundary):
     out = str(tmp_path / "kg")
+    _kill_publish_of(monkeypatch, boundary)
     with pytest.raises(RuntimeError, match="injected kill"):
-        _publish(spark, _docs(spark), out, fail_before=boundary)
+        _publish(spark, _docs(spark), out)
+    monkeypatch.undo()
     _publish(spark, _docs(spark), out)  # resume: idempotent overwrite
     assert _final_tables(spark, out) == clean_run
 
@@ -131,7 +152,7 @@ def test_kill_between_cc_rounds(spark, tmp_path, clean_run, monkeypatch):
     """Mid-connected-components kill: localCheckpoint (called once per CC
     round to cut lineage) raises partway through linking. The retry must
     produce the identical canonicalization — CC is a pure transform of
-    the already-checkpointed triples + mentions."""
+    the already-checkpointed entities."""
     # patch the CONCRETE class: pyspark 4 instances are
     # pyspark.sql.classic.dataframe.DataFrame, whose localCheckpoint
     # overrides the pyspark.sql.DataFrame base — patching the base is a
@@ -152,53 +173,29 @@ def test_kill_between_cc_rounds(spark, tmp_path, clean_run, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", flaky_lc)
     with pytest.raises(Exception, match="between CC rounds"):
-        _publish(spark, _docs(spark), out, fail_before=None)
+        _publish(spark, _docs(spark), out)
     monkeypatch.setattr(DataFrame, "localCheckpoint", real_lc)
     assert calls["n"] >= 4
     _publish(spark, _docs(spark), out)  # clean retry
     assert _final_tables(spark, out) == clean_run
 
 
-def test_kill_mid_incremental_update(spark, tmp_path, clean_run):
+def test_kill_mid_incremental_update(spark, tmp_path, clean_run, monkeypatch):
     """Incremental run (prior snapshot + new batch) killed after the
-    cumulative triples snapshot is written but before linking; the
-    resumed incremental run must equal the full rebuild."""
-    from glinerswift_spark.plans.kg_pipeline import update_kg
-
+    cumulative triples are published but before nodes/edges; the resumed
+    incremental run must equal the full rebuild."""
     docs = _docs(spark)
-    prior_docs = docs.where(F.col("doc_id") % 3 != 0)
-    new_docs = docs.where(F.col("doc_id") % 3 == 0)
     prior_out = str(tmp_path / "prior")
-    _publish(spark, prior_docs, prior_out)
+    _publish(spark, docs.where(F.col("doc_id") % 3 != 0), prior_out)
 
-    spec = flagship_gazetteer()
-    prior_entities = extract_entities(
-        prior_docs, FLAGSHIP_LABELS, spec, id_cols=["doc_id"], threshold=0.5
-    )
-    prior_mentions = attach_embeddings(
-        mentions_from_entities(prior_entities, "doc_id"), _emb(spark)
-    )
-    prior_triples = spark.read.parquet(os.path.join(prior_out, "triples")).drop(
-        "part_bucket"
-    )
-
-    # attempt 1: cumulative snapshot written, then a kill before linking
+    new_docs = docs.where(F.col("doc_id") % 3 == 0)
     inc_out = str(tmp_path / "inc")
-    kg = update_kg(
-        prior_mentions, prior_triples, new_docs, _emb(spark),
-        FLAGSHIP_LABELS, spec, threshold=0.5,
-    )
-    write_table(kg["triples"], os.path.join(inc_out, "triples_all"))
-    # (kill here: nodes/edges never written)
-
-    # attempt 2 (resume): rebuild the linking outputs from scratch
-    kg2 = update_kg(
-        prior_mentions, prior_triples, new_docs, _emb(spark),
-        FLAGSHIP_LABELS, spec, threshold=0.5,
-    )
-    write_table(kg2["triples"], os.path.join(inc_out, "triples_all"))
-    write_table(kg2["nodes"], os.path.join(inc_out, "nodes"))
-    write_table(kg2["edges"], os.path.join(inc_out, "edges"))
+    _kill_publish_of(monkeypatch, "nodes")
+    with pytest.raises(RuntimeError, match="before publishing nodes"):
+        _publish(spark, new_docs, inc_out, prior=prior_out)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(inc_out, "triples"))
+    _publish(spark, new_docs, inc_out, prior=prior_out)  # resume
 
     got_nodes = _rows(
         spark.read.parquet(os.path.join(inc_out, "nodes"))
@@ -208,9 +205,11 @@ def test_kill_mid_incremental_update(spark, tmp_path, clean_run):
         spark.read.parquet(os.path.join(inc_out, "edges"))
         .select("src_id", "pred", "dst_id", "weight")
     )
-    clean_nodes, clean_edges, _ = clean_run
+    clean_nodes, clean_edges, clean_triples = clean_run
     # exact: incremental == full rebuild on the shared projection
     full_nodes = {(r[0], r[1]) for r in clean_nodes}
     assert {(r[0], r[1]) for r in got_nodes} == full_nodes
     full_edges = sorted((r[0], r[1], r[2], r[3]) for r in clean_edges)
     assert got_edges == full_edges
+    # the published triples are the cumulative set a later run chains on
+    assert _final_tables(spark, inc_out)[2] == clean_triples

@@ -5,7 +5,7 @@ import pytest
 from glinerswift_spark.config import RelationConfig
 from glinerswift_spark.operators.extract import extract_entities
 from glinerswift_spark.operators.relations import entities_to_triples
-from glinerswift_spark.plans.kg_pipeline import extract_triples_fused, extract_and_link
+from glinerswift_spark.plans.kg_pipeline import extract_triples_fused
 from glinerswift_spark.scoring.backends import (
     FLAGSHIP_LABELS,
     flagship_gazetteer,
@@ -44,7 +44,9 @@ def test_fused_triples_equal_composable_triples(spark, docs):
     sample = docs.limit(50)
     rcfg = RelationConfig()
     fused = extract_triples_fused(sample, FLAGSHIP_LABELS, spec, relation_cfg=rcfg)
-    _, composed = extract_and_link(sample, FLAGSHIP_LABELS, spec, relation_cfg=rcfg)
+    composed = entities_to_triples(
+        extract_entities(sample, FLAGSHIP_LABELS, spec), rcfg
+    )
     key = lambda r: (r.doc_id, r.subj, r.pred, r.obj, round(r.score, 9))
     assert sorted(map(key, fused.collect())) == sorted(map(key, composed.collect()))
     assert fused.count() > 0
@@ -196,6 +198,24 @@ def test_widen_waves_selected_per_backend(spark, tmp_path):
     ).coalesce(1)
     chunky_big = extract_entities(big, ["person"], spec, threshold=0.3)
     assert chunky_big.rdd.getNumPartitions() == STRAGGLER_WAVES * cores
+
+
+@pytest.mark.parametrize("over_cap", [False, True])
+def test_widen_small_scan_row_cap(spark, over_cap):
+    # the size cap of a multi-wave widening counts at most
+    # waves*cores*WIDEN_ROWS_PER_TASK rows; below that count the
+    # partition count follows the rows, at or above it every wave is full
+    from glinerswift_spark.sources.pages import (
+        STRAGGLER_WAVES,
+        WIDEN_ROWS_PER_TASK,
+        widen_small_scan,
+    )
+
+    full = STRAGGLER_WAVES * spark.sparkContext.defaultParallelism
+    n_rows = (3 * full if over_cap else full - 2) * WIDEN_ROWS_PER_TASK
+    df = spark.range(n_rows).coalesce(1)
+    got = widen_small_scan(df, "id", STRAGGLER_WAVES).rdd.getNumPartitions()
+    assert got == (full if over_cap else full - 2)
 
 
 def test_extraction_entry_points_widen_alike(spark, tmp_path):

@@ -191,12 +191,12 @@ def test_streaming_triple_extraction_matches_batch(spark, tmp_path):
     batch row set — the kg_construct arrival story (crawl files land,
     each triggers extraction; global linking then folds in per batch via
     update_kg)."""
+    from glinerswift_spark.plans.kg_pipeline import extract_triples_fused
     from glinerswift_spark.scoring.backends import (
         FLAGSHIP_LABELS,
         flagship_gazetteer,
     )
     from glinerswift_spark.streaming.foreach_batch import stream_documents
-    from glinerswift_spark.streaming.stateful import extract_triples_stream
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(80)
     src = str(tmp_path / "docs_stream")
@@ -204,15 +204,13 @@ def test_streaming_triple_extraction_matches_batch(spark, tmp_path):
     docs.repartition(5).write.mode("overwrite").parquet(src)
 
     stream = stream_documents(spark, src)
-    out = extract_triples_stream(
+    out = extract_triples_fused(
         stream, FLAGSHIP_LABELS, flagship_gazetteer(), threshold=0.5
     )
     _run_to_memory(out, "triples_stream_out", "append")
     got = {
         tuple(r) for r in spark.sql("select * from triples_stream_out").collect()
     }
-
-    from glinerswift_spark.plans.kg_pipeline import extract_triples_fused
 
     batch = extract_triples_fused(
         spark.read.parquet(src), FLAGSHIP_LABELS, flagship_gazetteer(),
