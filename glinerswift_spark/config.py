@@ -2,9 +2,10 @@
 
 Defaults mirror the reference's active code path, not its README:
 ref Models/Configuration.swift:45-65 (threshold 0.3, maxSequenceLength 384,
-strideLength 192, maxSpanLength 8, hiddenDim 512, nmsThreshold 0.5) and the
-manifest constants (max_seq_len 512, max_width 8, max_schema_tokens 64,
-max_count 20 — ref Tests/GLiNERSwiftTests/GLiNER2ResourcesTests.swift:17-18).
+strideLength 192). The span width is the manifest's max_width 8
+(ref Tests/GLiNERSwiftTests/GLiNER2ResourcesTests.swift:17-18): every
+backend's score tensor is shaped by it, so it is the constant
+MAX_SPAN_WIDTH, not a per-call field.
 
 Chunker wiring mirrors ref GLiNERModel.swift:323-344:
   maxCharacters = max(maxSequenceLength * 8, 2048)
@@ -16,6 +17,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+MAX_SPAN_WIDTH = 8  # ref max_width=8 (GLiNER2ResourcesTests.swift:17-18)
+
 
 @dataclass(frozen=True)
 class Configuration:
@@ -24,11 +27,6 @@ class Configuration:
     threshold: float = 0.3
     max_sequence_length: int = 384
     stride_length: int = 192
-    max_span_width: int = 8          # ref max_width=8 (GLiNER2ResourcesTests.swift:17-18)
-    hidden_dim: int = 512
-    nms_threshold: float = 0.5       # legacy per-label IoU variant only
-    max_schema_tokens: int = 64
-    max_count: int = 20
     max_word_count: int = 240        # ref TextChunker.defaultMaxWordLimit
 
     @property

@@ -51,14 +51,6 @@ def minhash_band_sig_from_hashes(hashes: Column, band: int) -> Column:
     )
 
 
-def minhash_band_sig(shingles: Column, band: int) -> Column:
-    """min over shingles of an 8-hex-char band slice of md5(shingle).
-
-    Compatibility wrapper; prefer materializing ``shingle_hashes`` as a
-    column first so the planner computes md5 once across bands."""
-    return minhash_band_sig_from_hashes(shingle_hashes(shingles), band)
-
-
 def rolling_word_fingerprint(words: Column) -> Column:
     """Polynomial rolling hash over word codes, mod 1e9+7.
 

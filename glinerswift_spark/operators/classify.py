@@ -139,48 +139,6 @@ def top_prediction(classified: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def apply_validators(entities: DataFrame, fld: FieldSpec) -> DataFrame:
-    """Regex validators as column predicates (ref Schema.swift:264-300)."""
-    out = entities
-    for v in fld.validators:
-        pat = f"(?i){v.pattern}"
-        if v.mode == "full":
-            out = out.where(F.regexp_like("entity", F.lit(f"^(?:{pat})$")))
-        elif v.mode == "partial":
-            out = out.where(F.regexp_like("entity", F.lit(pat)))
-        elif v.mode == "exclude":
-            out = out.where(~F.regexp_like("entity", F.lit(pat)))
-        else:
-            raise ValueError(v.mode)
-    return out
-
-
-def project_dtype(
-    entities: DataFrame, dtype: str, id_cols: list[str] | None = None
-) -> DataFrame:
-    """dtype "str" -> FIRST match per (doc, label) in final entity order
-    (start asc, score desc — the SpanDecoder output order); "list" -> all
-    matches collected in that order (ref GLiNER2.swift:107-118).
-
-    DELIBERATE DIVERGENCE from the reference on chunked documents: the
-    reference's validEntities.first consumes the extractor's post-merge
-    order, which after a multi-chunk merge is score-DESCENDING, so its
-    'str' pick can differ from the single-chunk (start asc) order on long
-    documents. This engine re-sorts to the documented (start asc, score
-    desc) order for EVERY document, chunked or not — one deterministic,
-    SQL-replayable rule instead of an order that depends on whether the
-    document happened to chunk."""
-    id_cols = list(id_cols or ["doc_id"])
-    ordered = F.sort_array(
-        F.collect_list(F.struct(F.col("start"), (-F.col("score")).alias("negscore"), F.col("entity")))
-    )
-    agg = entities.groupBy(*id_cols, "label").agg(ordered.alias("__o"))
-    values = F.transform(F.col("__o"), lambda s: s["entity"])
-    if dtype == "str":
-        return agg.select(*id_cols, "label", F.element_at(values, 1).alias("value"))
-    return agg.select(*id_cols, "label", values.alias("values"))
-
-
 def predict_structure_counts(
     df: DataFrame,
     structure_name: str,
@@ -327,7 +285,10 @@ def _ordered_field_values(
     kept: DataFrame, id_col: str
 ) -> DataFrame:
     """-> (id, field, label, dtype, __o) with __o the (start asc, score
-    desc) ordered struct list — the SpanDecoder output order."""
+    desc) ordered struct list — the SpanDecoder output order, for every
+    document. Deliberate divergence on chunked documents: the reference's
+    validEntities.first reads its post-merge order, score-descending after
+    a multi-chunk merge; here one SQL-replayable order holds either way."""
     ordered = F.sort_array(F.collect_list(F.struct(
         F.col("start"), (-F.col("score")).alias("negscore"), F.col("entity"))))
     return kept.groupBy(id_col, "field", "label", "dtype").agg(

@@ -9,7 +9,7 @@ The label-of-label join halves the remaining distance to each
 component's minimum every round (path doubling), so convergence is
 O(log diameter) instead of O(diameter) — a 10^6-hop duplicate chain
 resolves in ~20 rounds. Near-dup clusters are usually tiny (diameter
-2-3), so the doubling join is DEFERRED (``jump_after``, default 2):
+2-3), so the doubling join is DEFERRED (``HASH_MIN_ROUNDS`` = 2):
 shallow graphs converge on seed + plain hash-min rounds without paying
 the extra self-join or its codegen, and the doubling term still makes
 the default max_iterations=20 budget safe for adversarial chain-shaped
@@ -28,31 +28,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# plain hash-min rounds before pointer jumping (the label-of-label
+# self-join) starts. Near-dup graphs overwhelmingly have diameter 2-3 —
+# seed + 2 plain rounds finish them without ever paying the extra join
+# and its codegen — while chain-shaped adversaries still converge in
+# HASH_MIN_ROUNDS + O(log diameter) rounds once doubling kicks in.
+HASH_MIN_ROUNDS = 2
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    on_exhaustion: str = "raise",
-    jump_after: int = 2,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id.
 
     If the labelling is still changing after ``max_iterations`` rounds
     (a component's diameter exceeds the budget — long duplicate chains
-    can do this at web scale), the labels are WRONG, not approximate:
-    ``on_exhaustion='raise'`` (default) fails loudly; ``'warn'`` logs and
-    returns the partial labels for callers that tolerate over-split
-    components.
-
-    ``jump_after``: pointer jumping (the label-of-label self-join) is
-    DEFERRED until this many plain hash-min rounds have run. Near-dup
-    graphs overwhelmingly have diameter 2-3 — seed + 2 plain rounds
-    finish them without ever paying the extra join + its codegen — while
-    chain-shaped adversaries still converge in
-    ``jump_after + O(log diameter)`` rounds once doubling kicks in.
-    Set 0 to jump from the first round."""
+    can do this at web scale), the labels are WRONG, not approximate, so
+    it raises ``RuntimeError`` instead of returning them."""
     # checkpoint FIRST: the (possibly expensive) edge computation upstream
     # materializes exactly once — symmetrizing via union would otherwise
     # evaluate the whole upstream plan twice (once per direction)
@@ -73,7 +68,6 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    converged = False
     for rnd in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["node"])
@@ -85,12 +79,12 @@ def connected_components(
             F.coalesce(F.col("nbr_min"), F.col("component")),
         ]
         joined = labels.join(neighbor_min, "node", "left")
-        if rnd >= jump_after:
+        if rnd >= HASH_MIN_ROUNDS:
             # pointer jumping: my component's CURRENT component (the
             # labels relation joined to itself on component = node). The
             # component id is always an existing node id, so the join is
             # total; deferred past the shallow-graph rounds (see
-            # ``jump_after``).
+            # ``HASH_MIN_ROUNDS``).
             grand = labels.select(
                 F.col("node").alias("__c"), F.col("component").alias("grand_min")
             )
@@ -108,18 +102,12 @@ def connected_components(
         changed = updated.where(F.col("__changed")).limit(1).count()
         labels = updated.drop("__changed")
         if changed == 0:
-            converged = True
             break
-    if not converged:
-        msg = (
+    else:
+        raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "rounds: a component's diameter exceeds the iteration budget "
             "and the returned labels would over-split it. Raise "
             "max_iterations (rounds needed = graph diameter)."
         )
-        if on_exhaustion == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels

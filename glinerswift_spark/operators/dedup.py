@@ -72,10 +72,12 @@ def _pair_expansion(ds, make):
     remove shuffles outright): a relation already grouped by its blocking
     key holds each bucket as one sorted array, and this expression emits
     every unordered pair exactly once (array sorted asc + i<j ⇒ first
-    element < second). Width bound: callers cap the bucket size BEFORE
-    collecting (max_df / max_bucket_size), so the expansion array holds
-    at most k(k-1)/2 structs — the same rows the self-join would stream,
-    built in one allocation instead of a sort-merge join of two branches.
+    element <= second; equal only when an id repeats, so callers keep
+    doc_a < doc_b after the explode). Width bound: callers cap the
+    bucket size BEFORE collecting (max_df / max_bucket_size), so the
+    expansion array holds at most k(k-1)/2 structs — the same rows the
+    self-join would stream, built in one allocation instead of a
+    sort-merge join of two branches.
     """
     k = F.size(ds)
     return F.flatten(
@@ -166,6 +168,7 @@ def minhash_candidate_pairs(
     return (
         grp.select(F.explode(pairs).alias("p"))
         .select("p.doc_a", "p.doc_b")
+        .where(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
 
@@ -176,34 +179,18 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_df: int | None = 1000,
-    hi_chunks: int | None = None,
+    max_df: int = 1000,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs with n-gram jaccard >= threshold.
 
     Candidates = pairs sharing >= 1 shingle with document frequency
-    <= ``max_df``. The df guard is ON BY DEFAULT: one boilerplate shingle
+    <= ``max_df``. The df guard is always on: one boilerplate shingle
     shared by k documents creates k^2/2 join rows, and at web scale a
     navigation footer shingle with k in the millions is a job-killer.
     The guard only prunes CANDIDATES — the jaccard itself is computed
     exactly over the FULL distinct-shingle sets, so for any pair that
-    still surfaces the value is identical to the unguarded form. Pass
-    ``max_df=None`` for exhaustive candidate generation (small corpora /
-    oracle replay parity).
-
-    ``hi_chunks``: width bound for the high-df correction (PLANS.md
-    "jaccard high-df width bound"). The default single-array form gives
-    every pair row one sorted array per side whose width is the doc's
-    ABOVE-max_df shingle count — fine under a production max_df that
-    scales with corpus size (boilerplate is a few shingles per doc), but
-    O(doc) on a boilerplate-saturated corpus. With ``hi_chunks=K`` each
-    doc's high-df set is hash-split into <= K chunks (chunk =
-    xxhash64(shingle) % K, consistent across docs, so per-chunk
-    intersections sum EXACTLY to the total); pair rows join per matching
-    chunk and a pair-keyed sum folds them back. Row width drops to
-    ~|hi|/K for one extra pair-keyed aggregate; values are bit-identical
-    to the unchunked form (pinned in tests/test_dedup.py).
+    still surfaces the value is identical to the unguarded form.
 
     The verification is NARROW by construction — no row anywhere carries
     a document-sized shingle array, so join-row width stays O(1) as
@@ -232,31 +219,6 @@ def ngram_jaccard_pairs(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if max_df is None:
-        # exhaustive mode (small corpora / oracle replay parity): no df
-        # guard means no bound on a shingle's postings, so keep the
-        # streaming self-join — a group-collect here would buffer an
-        # unbounded bucket
-        a = exz.select(F.col(id_col).alias("doc_a"), "sh", F.col("__z").alias("__za"))
-        b = exz.select(F.col(id_col).alias("doc_b"), "sh", F.col("__z").alias("__zb"))
-        guarded_stats = (
-            a.join(b, "sh")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.count(F.lit(1)).alias("__ig"),
-                F.max("__za").alias("__za"),
-                F.max("__zb").alias("__zb"),
-            )
-        )
-        pair_stats = guarded_stats.withColumn("__i", F.col("__ig"))
-        jac = F.col("__i") / (F.col("__za") + F.col("__zb") - F.col("__i"))
-        return pair_stats.select(
-            "doc_a",
-            "doc_b",
-            F.round(jac, 6).alias("jaccard"),
-        ).where(F.col("jaccard") >= threshold)
-
     dfreq = exz.groupBy("sh").count()
     # guarded = df <= max_df AND df >= 2: a shingle appearing in ONE doc
     # can be shared by no pair, contributes nothing to any intersection
@@ -295,6 +257,7 @@ def ngram_jaccard_pairs(
     guarded_stats = (
         grouped.select(F.explode(inc).alias("p"))
         .select("p.*")
+        .where(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(
             F.count(F.lit(1)).alias("__ig"),
@@ -319,63 +282,27 @@ def ngram_jaccard_pairs(
     # size), not by document size.
     hikeep = dfreq.where(F.col("count") > max_df).select("sh")
     hi = exz.join(hikeep, "sh")
-    if hi_chunks:
-        # width-bounded variant: hash-split each doc's high-df set
-        # into <= hi_chunks rows. chunk = xxhash64(sh) % K is the
-        # SAME for a shingle in every doc, so Ahi∩Bhi partitions
-        # disjointly by chunk and the per-chunk intersect sizes sum
-        # exactly. Missing chunks (either side) contribute 0 via the
-        # inner chunk join + left pair join below.
-        hic = (
-            hi.withColumn(
-                "__c", F.pmod(F.xxhash64("sh"), F.lit(hi_chunks)).cast("int")
-            )
-            .groupBy(id_col, "__c")
-            .agg(F.sort_array(F.collect_set("sh")).alias("__hs"))
+    hi_sets = hi.groupBy(id_col).agg(
+        F.sort_array(F.collect_set("sh")).alias("__hs")
+    )
+    ha = hi_sets.select(
+        F.col(id_col).alias("doc_a"), F.col("__hs").alias("__ha")
+    )
+    hb = hi_sets.select(
+        F.col(id_col).alias("doc_b"), F.col("__hs").alias("__hb")
+    )
+    pair_stats = (
+        guarded_stats.join(ha, "doc_a", "left")
+        .join(hb, "doc_b", "left")
+        .withColumn(
+            "__ih",
+            F.when(
+                F.col("__ha").isNotNull() & F.col("__hb").isNotNull(),
+                F.size(F.array_intersect("__ha", "__hb")),
+            ).otherwise(F.lit(0)),
         )
-        ha = hic.select(
-            F.col(id_col).alias("doc_a"), "__c", F.col("__hs").alias("__ha")
-        )
-        hb = hic.select(
-            F.col(id_col).alias("doc_b"), "__c", F.col("__hs").alias("__hb")
-        )
-        hi_overlap = (
-            guarded_stats.select("doc_a", "doc_b")
-            .join(ha, "doc_a")
-            .join(hb, ["doc_b", "__c"])
-            .withColumn("__ihc", F.size(F.array_intersect("__ha", "__hb")))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.sum("__ihc").alias("__ih"))
-        )
-        pair_stats = (
-            guarded_stats.join(hi_overlap, ["doc_a", "doc_b"], "left")
-            .withColumn(
-                "__i",
-                F.col("__ig") + F.coalesce(F.col("__ih"), F.lit(0)).cast("long"),
-            )
-        )
-    else:
-        hi_sets = hi.groupBy(id_col).agg(
-            F.sort_array(F.collect_set("sh")).alias("__hs")
-        )
-        ha = hi_sets.select(
-            F.col(id_col).alias("doc_a"), F.col("__hs").alias("__ha")
-        )
-        hb = hi_sets.select(
-            F.col(id_col).alias("doc_b"), F.col("__hs").alias("__hb")
-        )
-        pair_stats = (
-            guarded_stats.join(ha, "doc_a", "left")
-            .join(hb, "doc_b", "left")
-            .withColumn(
-                "__ih",
-                F.when(
-                    F.col("__ha").isNotNull() & F.col("__hb").isNotNull(),
-                    F.size(F.array_intersect("__ha", "__hb")),
-                ).otherwise(F.lit(0)),
-            )
-            .withColumn("__i", F.col("__ig") + F.col("__ih"))
-        )
+        .withColumn("__i", F.col("__ig") + F.col("__ih"))
+    )
     jac = F.col("__i") / (F.col("__za") + F.col("__zb") - F.col("__i"))
     return pair_stats.select(
         "doc_a",
@@ -722,7 +649,7 @@ def embedding_neardup_pairs(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_col: str | None = "label",
+    block_col: str = "label",
     n_buckets: int = 8,
 ) -> DataFrame:
     """(vec_a, vec_b, cos) pairs with cosine >= threshold, blocked by
@@ -744,17 +671,16 @@ def embedding_neardup_pairs(
 
     from glinerswift_spark.functions.hashing import dot_product, l2_norm
 
-    cols = [id_col, vec_col] + ([block_col] if block_col else [])
     bk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
     # per-row l2 norm precomputed BEFORE the grid-cell explode: one fold
     # per vector instead of one per candidate pair (and per replica) —
     # same expression, same fold order, bit-identical cosines
     base = widen_small_scan(emb, id_col).select(
-        *cols, bk.alias("__bk"), l2_norm(F.col(vec_col)).alias("__n")
+        id_col, vec_col, block_col,
+        bk.alias("__bk"), l2_norm(F.col(vec_col)).alias("__n"),
     )
-    blk = [F.col(block_col)] if block_col else []
     a = base.select(
-        *blk,
+        block_col,
         F.col(id_col).alias("__ia"),
         F.col(vec_col).alias("__va"),
         F.col("__n").alias("__na"),
@@ -762,15 +688,14 @@ def embedding_neardup_pairs(
         F.explode(F.sequence(F.col("__bk"), F.lit(n_buckets - 1))).alias("__q"),
     )
     b = base.select(
-        *blk,
+        block_col,
         F.col(id_col).alias("__ib"),
         F.col(vec_col).alias("__vb"),
         F.col("__n").alias("__nb"),
         F.explode(F.sequence(F.lit(0), F.col("__bk"))).alias("__p"),
         F.col("__bk").alias("__q"),
     )
-    on = ([block_col] if block_col else []) + ["__p", "__q"]
-    joined = a.join(b, on=on).where(
+    joined = a.join(b, on=[block_col, "__p", "__q"]).where(
         (F.col("__p") < F.col("__q")) | (F.col("__ia") < F.col("__ib"))
     )
     c = dot_product(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))

@@ -36,17 +36,18 @@ def mentions_from_entities(entities: DataFrame, doc_col: str = "doc_id") -> Data
 
 
 def surface_to_canonical(mentions_with_map: DataFrame) -> DataFrame:
-    """(lower(text), label) -> canonical_id map.
+    """lower(text) -> canonical_id map: ONE canonical id per lowercased
+    surface, used to resolve triple endpoints (surface forms) to node ids
+    without re-running extraction.
 
-    Surface-level linking guarantees one canonical_id per (surface, label);
-    the min() is a deterministic no-op guard. Used to resolve triple
-    endpoints (surface forms) to node ids without re-running extraction."""
-    return (
-        mentions_with_map.groupBy(
-            F.lower(F.col("text")).alias("surface"), F.col("label")
-        )
-        .agg(F.min("canonical_id").alias("canonical_id"))
-    )
+    Triples carry surface forms, not labels, so a surface linked under
+    two labels takes min(canonical_id) across them (deterministic).
+    Documented choice: every matching triple endpoint resolves to that
+    single node instead of fanning each triple out into duplicate edges
+    with inflated weights."""
+    return mentions_with_map.groupBy(
+        F.lower(F.col("text")).alias("surface")
+    ).agg(F.min("canonical_id").alias("canonical_id"))
 
 
 def materialize_edges(
@@ -59,13 +60,6 @@ def materialize_edges(
     surface_map is small relative to the corpus (distinct surfaces), and is
     broadcast when under the autoBroadcast threshold; at true web scale it
     becomes a shuffle join on the surface key — either way an equi-join.
-
-    Triples carry surface forms, not labels, so the per-(surface, label)
-    map is first collapsed to ONE canonical_id per surface
-    (min(canonical_id), deterministic). Documented choice: a surface
-    linked under two labels resolves every matching triple endpoint to
-    that single node instead of fanning each triple out into duplicate
-    edges with inflated weights.
     """
     resolved = _resolve_triples(triples, surface_map)
     return (
@@ -80,13 +74,10 @@ def materialize_edges(
 def _resolve_triples(triples: DataFrame, surface_map: DataFrame) -> DataFrame:
     """Resolve triple endpoints (surface forms) to canonical node ids —
     shared by materialize_edges and edge_timespans."""
-    collapsed = surface_map.groupBy("surface").agg(
-        F.min("canonical_id").alias("canonical_id")
-    )
-    src = collapsed.select(
+    src = surface_map.select(
         F.col("surface").alias("__s_surface"), F.col("canonical_id").alias("src_id")
     )
-    dst = collapsed.select(
+    dst = surface_map.select(
         F.col("surface").alias("__o_surface"), F.col("canonical_id").alias("dst_id")
     )
     return (

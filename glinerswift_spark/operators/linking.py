@@ -132,14 +132,12 @@ def link_mentions(mentions: DataFrame, cfg: LinkingConfig | None = None):
         "label",
         F.coalesce("component", "surface_id").alias("canonical_id"),
     )
-    mention_map = (
-        mentions.withColumn("surface", F.lower(F.col("text")))
-        .join(surface_canon, ["surface", "label"])
-        .select("mention_id", "canonical_id")
+    mapped = mentions.withColumn("surface", F.lower(F.col("text"))).join(
+        surface_canon, ["surface", "label"]
     )
+    mention_map = mapped.select("mention_id", "canonical_id")
     nodes = (
-        mentions.join(mention_map, "mention_id")
-        .groupBy("canonical_id", "label")
+        mapped.groupBy("canonical_id", "label")
         .agg(
             F.sort_array(F.collect_set("text")).alias("surface_forms"),
             F.count(F.lit(1)).alias("n_mentions"),

@@ -312,12 +312,3 @@ def publish_kg(
     kg = kg_from_entities(entities, embeddings, doc_col, prior=prior)
     for name in PUBLISHED_TABLES:
         write_table(kg[name], os.path.join(out, name))
-
-
-def top_relations(triples: DataFrame) -> DataFrame:
-    """Headline aggregate: most frequent (subj, pred, obj) edges."""
-    return (
-        triples.groupBy("subj", "pred", "obj")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("score"), 4).alias("avg_score"))
-        .orderBy(F.desc("n"), "subj", "pred", "obj")
-    )

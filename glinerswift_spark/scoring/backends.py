@@ -36,6 +36,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from glinerswift_spark.config import MAX_SPAN_WIDTH
 from glinerswift_spark.scoring.core import logit
 
 NEG_INF = float(-1e30)
@@ -99,10 +100,8 @@ class GazetteerBackend:
         self, text: str, spans: list, labels: list
     ) -> np.ndarray:
         """logits [n_words, max_width, n_labels]; -inf where unmatched."""
-        from glinerswift_spark.config import DEFAULT_CONFIG
-
         n = len(spans)
-        max_w = DEFAULT_CONFIG.max_span_width
+        max_w = MAX_SPAN_WIDTH
         out = np.full((n, max_w, len(labels)), NEG_INF, dtype=np.float64)
         label_idx = {lb: i for i, lb in enumerate(labels)}
         wmax = min(max_w, self.max_phrase_words)
@@ -127,10 +126,8 @@ class GazetteerBackend:
         tie-break total order exactly. A lexicon backend touches ~10 cells
         of the [words x widths x labels] tensor per document — emitting
         just those skips the dense allocation + argwhere scan entirely."""
-        from glinerswift_spark.config import DEFAULT_CONFIG
-
         n = len(spans)
-        max_w = DEFAULT_CONFIG.max_span_width
+        max_w = MAX_SPAN_WIDTH
         cells_by_surface = self._label_cells(tuple(labels))
         wmax = min(max_w, self.max_phrase_words)
         out = []
@@ -169,10 +166,8 @@ class GazetteerBackend:
         as score_document, but only a running max per label. Value-exact
         with max-over-the-dense-tensor (labels never hit keep the dense
         path's NEG_INF fill)."""
-        from glinerswift_spark.config import DEFAULT_CONFIG
-
         n = len(spans)
-        max_w = DEFAULT_CONFIG.max_span_width
+        max_w = MAX_SPAN_WIDTH
         label_idx = {lb: i for i, lb in enumerate(labels)}
         out = np.full(len(labels), NEG_INF)
         wmax = min(max_w, self.max_phrase_words)
@@ -239,10 +234,8 @@ class HashEmbeddingBackend:
         return m
 
     def score_document(self, text: str, spans: list, labels: list) -> np.ndarray:
-        from glinerswift_spark.config import DEFAULT_CONFIG
-
         n = len(spans)
-        max_w = DEFAULT_CONFIG.max_span_width
+        max_w = MAX_SPAN_WIDTH
         n_lb = len(labels)
         if n == 0 or n_lb == 0:
             return np.full((n, max_w, n_lb), NEG_INF)
@@ -375,10 +368,8 @@ class NeuralStubBackend:
         return m
 
     def score_document(self, text: str, spans: list, labels: list) -> np.ndarray:
-        from glinerswift_spark.config import DEFAULT_CONFIG
-
         n = len(spans)
-        max_w = DEFAULT_CONFIG.max_span_width
+        max_w = MAX_SPAN_WIDTH
         n_lb = len(labels)
         if n == 0 or n_lb == 0:
             return np.full((n, max_w, n_lb), NEG_INF)
@@ -398,9 +389,7 @@ class NeuralStubBackend:
         the per-timestep GEMMs run once for the whole batch instead of
         once per document. Same numerics as score_document per doc
         (float round-off only; pinned by test)."""
-        from glinerswift_spark.config import DEFAULT_CONFIG
-
-        max_w = DEFAULT_CONFIG.max_span_width
+        max_w = MAX_SPAN_WIDTH
         n_lb = len(labels)
         lab = self._labels(labels) if n_lb else None
         word_mats = []
@@ -707,13 +696,12 @@ class PromptEncodingBackend:
         return project_hidden_states(self._hidden_states(encoding), encoding)
 
     def score_document(self, text: str, spans: list, labels: list) -> np.ndarray:
-        from glinerswift_spark.config import DEFAULT_CONFIG
         from glinerswift_spark.functions.schema_encoding import (
             entity_label_embeddings,
         )
 
         n = len(spans)
-        max_w = DEFAULT_CONFIG.max_span_width
+        max_w = MAX_SPAN_WIDTH
         n_lb = len(labels)
         if n == 0 or n_lb == 0:
             return np.full((n, max_w, n_lb), NEG_INF)
@@ -736,12 +724,11 @@ class PromptEncodingBackend:
         (python-side, memoized tokenization), but the span-rep head runs
         ONE BiLSTM/FFN batch pass across all documents — the same batch
         seam a real batched transformer encoder plugs into."""
-        from glinerswift_spark.config import DEFAULT_CONFIG
         from glinerswift_spark.functions.schema_encoding import (
             entity_label_embeddings,
         )
 
-        max_w = DEFAULT_CONFIG.max_span_width
+        max_w = MAX_SPAN_WIDTH
         n_lb = len(labels)
         encodings = []
         for text, spans in zip(texts, spans_list):

@@ -155,10 +155,10 @@ def decode_spans_legacy(
     spans: list[tuple[int, int]],
     nms_threshold: float = 0.5,
 ) -> list[Entity]:
-    """GLiNER-v1-style decode kept available as config (the reference keeps
-    this path as dead code + Configuration.nmsThreshold): sigmoid >=
-    threshold -> greedy by score desc, but suppression is PER LABEL and
-    only when IoU > nms_threshold (ref Inference/EntityExtractor.swift:20-83).
+    """GLiNER-v1-style decode (the reference keeps this path as dead code
+    behind Configuration.nmsThreshold): sigmoid >= threshold -> greedy by
+    score desc, but suppression is PER LABEL and only when
+    IoU > nms_threshold (ref Inference/EntityExtractor.swift:20-83).
     Overlapping spans of different labels BOTH survive here, unlike the
     active flat-NMS path."""
     n_words = len(spans)

@@ -124,7 +124,8 @@ def test_structured_extraction_with_validators(spark):
 
 
 def test_dtype_str_vs_list(spark):
-    from glinerswift_spark.operators.classify import project_dtype
+    from glinerswift_spark.operators.classify import structure_from_entities
+    from glinerswift_spark.schema import FieldSpec
 
     rows = [
         (1, "l", "b", 0.9, 10, 11),
@@ -134,10 +135,13 @@ def test_dtype_str_vs_list(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, label string, entity string, score double, start int, end int"
     )
-    s = project_dtype(df, "str").collect()[0]
-    assert s.value == "a"
-    l = project_dtype(df, "list").collect()[0]
-    assert list(l["values"]) == ["a", "b", "c"]
+    fields = [
+        FieldSpec("s", dtype="str", description="l"),
+        FieldSpec("v", dtype="list", description="l"),
+    ]
+    got = {r.field: r.value for r in structure_from_entities(df, "x", fields).collect()}
+    assert got["s"] == "a"
+    assert got["v"].split("|") == ["a", "b", "c"]
 
 
 def test_run_schema_multitask_single_pass(spark):

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from glinerswift_spark.plans.kg_pipeline import build_kg, top_relations
+from glinerswift_spark.plans.kg_pipeline import build_kg
 from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
 from glinerswift_spark.sources.pages import read_documents, read_embeddings
 
@@ -41,9 +41,6 @@ def test_build_kg_end_to_end(spark, sf_dir):
     edges = kg["edges"].cache()
     assert edges.count() > 0
     assert edges.where(F.col("weight") <= 0).count() == 0
-
-    top = top_relations(triples).limit(5).collect()
-    assert len(top) > 0 and top[0].n >= top[-1].n
 
 
 def test_incremental_update_equals_full_rebuild(spark, sf_dir):
